@@ -9,15 +9,9 @@ executor catches it to end the whole job cleanly
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 
 class NoDataToProcess(Exception):
     """Raised when a file registry finds no new files/rows to lift."""
-
-
-class BlockError(Exception):
-    """A block failed to resolve or execute."""
 
 
 class IndexHealthError(Exception):
@@ -41,31 +35,3 @@ class ValidationError(Exception):
     def __init__(self, message: str, counts: dict):
         super().__init__(message)
         self.counts = counts
-
-
-@contextmanager
-def missing_table_as_empty(result_holder: list):
-    """Yield, converting a missing-table AnalysisException into a sentinel.
-
-    The reference turns "delta table does not exist" into an empty
-    DataFrame (``getl/common/errors.py:43-57``,
-    ``getl/blocks/load/entrypoint.py:217,234-236``). We keep the same
-    behavior for any path-based read of an absent table.
-    """
-    from pyspark.errors import AnalysisException
-
-    try:
-        yield
-    except AnalysisException as exc:
-        msg = str(exc)
-        markers = (
-            "PATH_NOT_FOUND",
-            "is not a Delta table",
-            "doesn't exist",
-            "does not exist",
-            "UNABLE_TO_INFER_SCHEMA",
-        )
-        if any(m in msg for m in markers):
-            result_holder.append(None)
-        else:
-            raise

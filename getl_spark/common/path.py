@@ -11,7 +11,7 @@ from __future__ import annotations
 import glob as _glob
 import os
 import shutil
-from typing import Iterator, List, Optional, Tuple
+from typing import Iterator, Optional, Tuple
 
 
 class StoragePath:
@@ -133,7 +133,3 @@ class StoragePath:
                 child.delete()
             return
         self.delete()
-
-
-def paths_from(listing: List[str]) -> List[StoragePath]:
-    return [StoragePath(p) for p in listing]

@@ -9,11 +9,11 @@ so every Delta capability the engine needs is defined here behind one
 
 * ``delta`` — thin calls into ``DeltaTable`` / Delta SQL, identical in
   spirit to the reference.
-* ``parquet`` fallback — same *semantics* (merge-upsert, insert-only
-  merge, conditional update) expressed as pure DataFrame plans plus an
-  atomic directory swap. Correctness-equivalent; not ACID under
-  concurrent writers, and rewrites are O(table) — documented tradeoff,
-  used for tests and delta-less environments only.
+* ``parquet`` fallback — same *semantics* (merge-upsert, conditional
+  update) expressed as pure DataFrame plans plus a directory swap.
+  Correctness-equivalent; not ACID under concurrent writers, and
+  rewrites are O(table) — documented tradeoff, used for tests and
+  delta-less environments only.
 
 Merge contract: the user-supplied merge statement references the fixed
 aliases ``source`` (existing rows) and ``updates`` (incoming rows) —
@@ -28,6 +28,7 @@ import uuid
 from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from getl_spark.common.scale import pin
 
@@ -45,10 +46,17 @@ DEFAULT_FORMAT = "delta" if HAS_DELTA else "parquet"
 class ManagedTable:
     """A path-addressed table supporting write modes and merge/upsert."""
 
-    def __init__(self, spark: SparkSession, path: str, fmt: Optional[str] = None):
+    def __init__(
+        self,
+        spark: SparkSession,
+        path: str,
+        fmt: Optional[str] = None,
+        schema: Optional[StructType] = None,
+    ):
         self.spark = spark
         self.path = path
         self.fmt = fmt or DEFAULT_FORMAT
+        self.schema = schema
 
     # ---------------------------------------------------------------- basics
     def exists(self) -> bool:
@@ -62,9 +70,15 @@ class ManagedTable:
         return False
 
     def read(self) -> Optional[DataFrame]:
+        """The table, or None when absent. A declared ``schema`` spares
+        the parquet fallback its schema-inference job; Delta refuses a
+        read-time schema and keeps its own."""
         if not self.exists():
             return None
-        return self.spark.read.format(self.fmt).load(self.path)
+        reader = self.spark.read.format(self.fmt)
+        if self.schema is not None and self.fmt != "delta":
+            reader = reader.schema(self.schema)
+        return reader.load(self.path)
 
     def write(
         self,
@@ -102,27 +116,7 @@ class ManagedTable:
                 .execute()
             )
             return
-        source = self.read()
-        result = self._merge_fallback(source, updates, merge_statement, keep="updates")
-        self._rewrite(result)
-
-    def insert_all(self, updates: DataFrame, merge_statement: str) -> None:
-        """Merge: insert rows with no match, never touch existing rows
-        (reference ``getl/common/delta_table.py:42-44``)."""
-        if not self.exists():
-            self.write(updates, mode="overwrite")
-            return
-        if self.fmt == "delta":
-            (
-                DeltaTable.forPath(self.spark, self.path)
-                .alias("source")
-                .merge(updates.alias("updates"), merge_statement)
-                .whenNotMatchedInsertAll()
-                .execute()
-            )
-            return
-        source = self.read()
-        result = self._merge_fallback(source, updates, merge_statement, keep="source")
+        result = self._merge_fallback(self.read(), updates, merge_statement)
         self._rewrite(result)
 
     def update(self, condition, assignments: dict) -> None:
@@ -402,29 +396,21 @@ class ManagedTable:
 
     # ------------------------------------------------------------- internals
     def _merge_fallback(
-        self, source: DataFrame, updates: DataFrame, merge_statement: str, keep: str
+        self, source: DataFrame, updates: DataFrame, merge_statement: str
     ) -> DataFrame:
-        """Express merge as anti-join + union through spark.sql so the
-        user's ``source.x = updates.x`` condition parses unchanged."""
+        """Express the upsert as anti-join + union through spark.sql so
+        the user's ``source.x = updates.x`` condition parses unchanged."""
         sv = f"getl_merge_source_{uuid.uuid4().hex[:8]}"
         uv = f"getl_merge_updates_{uuid.uuid4().hex[:8]}"
         source.createOrReplaceTempView(sv)
         updates.createOrReplaceTempView(uv)
         try:
-            if keep == "updates":  # upsert_all
-                sql = f"""
-                    SELECT updates.* FROM {uv} AS updates
-                    UNION ALL
-                    SELECT source.* FROM {sv} AS source
-                    LEFT ANTI JOIN {uv} AS updates ON {merge_statement}
-                """
-            else:  # insert_all
-                sql = f"""
-                    SELECT source.* FROM {sv} AS source
-                    UNION ALL
-                    SELECT updates.* FROM {uv} AS updates
-                    LEFT ANTI JOIN {sv} AS source ON {merge_statement}
-                """
+            sql = f"""
+                SELECT updates.* FROM {uv} AS updates
+                UNION ALL
+                SELECT source.* FROM {sv} AS source
+                LEFT ANTI JOIN {uv} AS updates ON {merge_statement}
+            """
             # Stays lazy and distributed: _rewrite targets a temp dir,
             # so the plan may keep reading self.path while writing.
             return self.spark.sql(sql)
@@ -436,18 +422,31 @@ class ManagedTable:
         """Atomically replace the table contents (fallback only).
 
         Writes to a sibling temp dir then swaps, because Spark cannot
-        overwrite a path that is an input of the running plan.
+        overwrite a path that is an input of the running plan. The old
+        table is renamed aside, the new one moved in, and only then is
+        the old one deleted, so a crash never loses both; a failed
+        move-in puts the old table back.
         """
         if self.path.startswith(("s3://", "s3a://")):
             raise NotImplementedError(
                 "parquet-fallback rewrite on object storage is unsafe; "
                 "install delta-spark for ACID merges"
             )
-        tmp = f"{self.path}__getl_tmp_{uuid.uuid4().hex[:8]}"
+        token = uuid.uuid4().hex[:8]
+        tmp = f"{self.path}__getl_tmp_{token}"
         df.write.format(self.fmt).mode("overwrite").save(tmp)
-        if os.path.isdir(self.path):
-            shutil.rmtree(self.path)
-        os.replace(tmp, self.path)
+        if not os.path.isdir(self.path):
+            os.replace(tmp, self.path)
+            return
+        old = f"{self.path}__getl_old_{token}"
+        os.replace(self.path, old)
+        try:
+            os.replace(tmp, self.path)
+        except BaseException:
+            os.replace(old, self.path)
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        shutil.rmtree(old)
 
 
 class HiveTable:

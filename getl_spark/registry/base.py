@@ -15,6 +15,7 @@ from __future__ import annotations
 import datetime as dt
 import logging
 from abc import ABC, abstractmethod
+from typing import List
 
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType, StringType, TimestampType
@@ -67,7 +68,7 @@ class ControlTableRegistry(FileRegistry, ABC):
         # stay date_lifted=NULL and surface on the next run.
         self.max_files_per_run = bconf.get("MaxFilesPerRun", None)
         self._current_batch = None
-        self.table = ManagedTable(self.spark, self.registry_path)
+        self.table = ManagedTable(self.spark, self.registry_path, schema=self.schema)
         if bconf.exists("HiveDatabaseName"):
             from getl_spark.common.tables import HiveTable
 
@@ -101,22 +102,36 @@ class ControlTableRegistry(FileRegistry, ABC):
                     condition = condition & F.col("file_path").isin(batch)
                 self.table.update(condition, stamp)
 
-    def _register_new_files(self, rows: list) -> None:
-        """Insert-only merge of newly discovered files."""
-        if not rows:
-            return
-        updates = local_df(self.spark, rows, self.schema)
-        self.table.insert_all(updates, "source.file_path = updates.file_path")
+    def _load_pending(self, listed: list, snapshot=None) -> List[str]:
+        """Register the listed files the control table does not hold
+        and return every pending (``date_lifted`` NULL) file, sorted.
 
-    def _unlifted_paths(self) -> list:
+        ``listed`` holds one control-table row per listed file,
+        ``file_path`` first. One collect of
+        (``file_path``, ``date_lifted``) — only the rows matching the
+        ``snapshot`` condition, when given — tells the driver which
+        files are new; those are appended with ``date_lifted`` NULL
+        before any data is read, so a lift that fails before
+        ``update()`` leaves them pending for the next run. A lift that
+        lists nothing new writes nothing.
+        """
         # reset up front: a stale batch from a prior load() on this
         # instance must never restrict a later update() to old paths
         self._current_batch = None
+        known, pending = set(), set()
         df = self.table.read()
-        if df is None:
-            return []
-        data = df.where(F.col("date_lifted").isNull()).select("file_path").collect()
-        paths = sorted(row.file_path for row in data)
+        if df is not None:
+            if snapshot is not None:
+                df = df.where(snapshot)
+            for row in df.select("file_path", "date_lifted").collect():
+                known.add(row.file_path)
+                if row.date_lifted is None:
+                    pending.add(row.file_path)
+        new = {row[0]: row for row in listed if row[0] not in known}
+        if new:
+            self.table.write(local_df(self.spark, new.values(), self.schema))
+            pending.update(new)
+        paths = sorted(pending)
         cap = self.max_files_per_run
         if cap is None and len(paths) > _BACKLOG_WARN_THRESHOLD:
             LOGGER.warning(
@@ -134,6 +149,4 @@ class ControlTableRegistry(FileRegistry, ABC):
             )
             paths = paths[: int(cap)]
             self._current_batch = paths
-        else:
-            self._current_batch = None
         return paths

@@ -6,8 +6,8 @@ For data laid out under strftime-shaped prefixes
 the window ``[max(prefix_date), now]`` are enumerated — partition-
 pruned *discovery*, so a ten-year-old lake with millions of files
 costs one day's listing per run. The last lifted prefix is re-scanned
-on purpose to pick up late-arriving files; the control-table merge
-keeps re-discovered files deduplicated.
+on purpose to pick up late-arriving files; re-discovered files are
+dropped on the driver against the control-table rows of that window.
 """
 
 from __future__ import annotations
@@ -94,13 +94,16 @@ class DatePrefixScan(ControlTableRegistry):
 
     def load(self, path: str, suffix: str = "") -> List[str]:
         start = self._high_water_mark()
-        rows = []
+        listed = []
         for prefix_date in date_range(start, utcnow(), self.partition_format):
             prefix = prefix_date.strftime(self.partition_format)
             for file_path in list_files(f"{path.rstrip('/')}/{prefix}", suffix):
-                rows.append((file_path, prefix_date, None))
-        self._register_new_files(rows)
-        return self._unlifted_paths()
+                listed.append((file_path, prefix_date, None))
+        # the snapshot covers the listed window and the pending rows,
+        # never the whole lifted history
+        first = _truncate(start, _granularity(self.partition_format))
+        window = (F.col("prefix_date") >= F.lit(first)) | F.col("date_lifted").isNull()
+        return self._load_pending(listed, window)
 
     def _high_water_mark(self) -> dt.datetime:
         df = self.table.read()

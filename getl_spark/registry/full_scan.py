@@ -1,10 +1,11 @@
 """Full-scan file registry (reference ``getl/fileregistry/s3_full_scan.py``).
 
-Lists *every* file under the base path each run and anti-inserts the
-unseen ones into the control table with ``date_lifted = NULL``. Works
-on local paths and ``s3://`` URIs through the shared listing layer.
-Scale note: listing cost is O(total files) — for date-laid-out data
-prefer ``date_prefix_scan`` which only lists the open date window.
+Lists *every* file under the base path each run and appends the unseen
+ones to the control table with ``date_lifted = NULL``. Works on local
+paths and ``s3://`` URIs through the shared listing layer.
+Scale note: the listing and the control-table snapshot each run are
+O(total files) — for date-laid-out data prefer ``date_prefix_scan``
+which only lists the open date window.
 """
 
 from __future__ import annotations
@@ -17,7 +18,5 @@ from getl_spark.registry.base import ControlTableRegistry
 
 class FullScan(ControlTableRegistry):
     def load(self, path: str, suffix: str = "") -> List[str]:
-        discovered = list_files(path, suffix)
-        rows = [(file_path, None) for file_path in discovered]
-        self._register_new_files(rows)
-        return self._unlifted_paths()
+        listed = [(file_path, None) for file_path in list_files(path, suffix)]
+        return self._load_pending(listed)

@@ -7,6 +7,7 @@ import pytest
 from hypothesis import given, settings, strategies as st
 
 from getl_spark import lift
+from getl_spark.common.tables import HAS_DELTA
 from getl_spark.registry.date_prefix_scan import date_range
 
 
@@ -425,3 +426,185 @@ def test_unbounded_backlog_logs_warning(spark, tmp_path, monkeypatch, caplog):
         paths = registry.load(src, ".json")
     assert len(paths) == 3
     assert any("MaxFilesPerRun" in rec.message for rec in caplog.records)
+
+
+# ------------------------------------- one control-table read per load
+def _jobs_in(spark, fn):
+    """``fn()`` and the number of Spark jobs it ran, counted from its
+    own job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"registry-load-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _table_files(path):
+    """name → (size, mtime) of every file in a table directory."""
+    import os
+
+    stats = {name: os.stat(os.path.join(path, name)) for name in os.listdir(path)}
+    return {name: (st.st_size, st.st_mtime_ns) for name, st in stats.items()}
+
+
+def _json_file(spark, src, i):
+    spark.createDataFrame([(i,)], "id BIGINT").coalesce(1).write.mode(
+        "append"
+    ).json(src)
+
+
+@pytest.mark.skipif(
+    HAS_DELTA, reason="job counts are those of the parquet-fallback control table",
+)
+def test_full_scan_idle_load_is_one_job_and_writes_nothing(spark, tmp_path):
+    """A load that lists no new file costs one collect and leaves the
+    control table's files untouched; a load with new files appends
+    them beside the existing part files and returns the pending rows
+    plus the new files, sorted."""
+    from getl_spark.plans.context import BlockConfig
+    from getl_spark.registry.full_scan import FullScan
+
+    src, reg = str(tmp_path / "src"), str(tmp_path / "reg")
+    for i in range(3):
+        _json_file(spark, src, i)
+    registry = FullScan(BlockConfig("Reg", spark, None, {"BasePath": reg}))
+    assert len(registry.load(src, ".json")) == 3
+    registry.update()
+
+    before = _table_files(reg)
+    paths, jobs = _jobs_in(spark, lambda: registry.load(src, ".json"))
+    assert paths == []
+    assert jobs == 1
+    assert _table_files(reg) == before
+
+    # one new file left pending (no update), then one more lands
+    _json_file(spark, src, 3)
+    (pending,) = registry.load(src, ".json")
+    kept = _table_files(reg)
+    _json_file(spark, src, 4)
+    paths, jobs = _jobs_in(spark, lambda: registry.load(src, ".json"))
+    assert jobs <= 2  # the collect and the append
+    after = _table_files(reg)
+    parts = {n: st for n, st in kept.items() if n.endswith(".parquet")}
+    assert {n: after[n] for n in parts} == parts
+    assert len([n for n in after if n.endswith(".parquet")]) == len(parts) + 1
+    assert pending in paths and len(paths) == 2 and paths == sorted(paths)
+    rows = spark.read.parquet(reg)
+    assert sorted(r.file_path for r in rows.where("date_lifted IS NULL").collect()) == paths
+    assert rows.count() == 5
+
+
+def test_failed_lift_leaves_its_files_pending(spark, tmp_path):
+    """At-least-once: files a lift discovered are registered with
+    date_lifted NULL before its data is read, so a lift that fails
+    before UpdateAfter leaves them pending, and the next lift returns
+    and stamps them."""
+    src, reg, out = str(tmp_path / "src"), str(tmp_path / "reg"), str(tmp_path / "out")
+    for i in range(2):
+        _json_file(spark, src, i)
+
+    class Boom(Exception):
+        pass
+
+    def fail(params):
+        raise Boom("UpdateAfter block failed")
+
+    definition = f"""
+FileRegistry:
+  Reg:
+    Type: fileregistry::s3_full_scan
+    Properties:
+      BasePath: {reg}
+      UpdateAfter: Commit
+LiftJob:
+  Loaded:
+    Type: load::batch_json
+    Properties:
+      Path: {src}
+      FileRegistry: Reg
+      JsonSchema:
+        type: struct
+        fields:
+          - {{name: id, type: long, nullable: true}}
+  Commit:
+    Type: custom::python_codeblock
+    Input: [Loaded]
+    Properties:
+      CustomFunction: ${{fn}}
+"""
+    with pytest.raises(Boom):
+        lift(spark, definition, {"fn": fail})
+    rows = spark.read.parquet(reg).collect()
+    assert len(rows) == 2
+    assert all(r.date_lifted is None for r in rows)
+
+    def write(params):
+        df = params["dataframes"]["Loaded"]
+        df.write.mode("append").parquet(out)
+        return df
+
+    lift(spark, definition, {"fn": write})
+    assert sorted(r.id for r in spark.read.parquet(out).collect()) == [0, 1]
+    rows = spark.read.parquet(reg).collect()
+    assert len(rows) == 2
+    assert all(r.date_lifted is not None for r in rows)
+
+
+def test_date_prefix_scan_late_file_in_last_prefix(spark, tmp_path):
+    """The last lifted prefix is re-scanned: a file that lands there
+    late is registered once and lifted, while the files already
+    stamped there are not registered again."""
+    import os
+
+    src, reg, out = str(tmp_path / "src"), str(tmp_path / "reg"), str(tmp_path / "out")
+    df = spark.createDataFrame([(1, "a")], "id BIGINT, v STRING")
+    for prefix in ["2022/05/05", "2022/06/15"]:
+        df.coalesce(1).write.mode("append").parquet(f"{src}/{prefix}")
+    definition = f"""
+FileRegistry:
+  Reg:
+    Type: fileregistry::s3_date_prefix_scan
+    Properties:
+      BasePath: {reg}
+      UpdateAfter: Write
+      DefaultStartDate: 2022-05-01
+      PartitionFormat: "%Y/%m/%d"
+LiftJob:
+  Load:
+    Type: load::batch_parquet
+    Properties:
+      Path: {src}
+      FileRegistry: Reg
+  Write:
+    Type: write::batch_parquet
+    Input: Load
+    Properties: {{Path: {out}, Mode: append}}
+"""
+    lift(spark, definition)
+    assert spark.read.parquet(out).count() == 2
+
+    spark.createDataFrame([(2, "late")], "id BIGINT, v STRING").coalesce(1).write.mode(
+        "append"
+    ).parquet(f"{src}/2022/06/15")
+    lift(spark, definition)
+    lift(spark, definition)  # nothing new: no file is registered twice
+
+    assert sorted(r.id for r in spark.read.parquet(out).collect()) == [1, 1, 2]
+    files = [
+        os.path.join(d, f)
+        for d, _, names in os.walk(src)
+        for f in names
+        if f.endswith(".parquet")
+    ]
+    rows = spark.read.parquet(reg).collect()
+    assert len(rows) == len(files) == 3
+    assert sorted(r.file_path for r in rows) == sorted(files)
+    assert all(r.date_lifted is not None for r in rows)
+    late = [r for r in rows if r.prefix_date == dt.datetime(2022, 6, 15)]
+    assert len(late) == 2

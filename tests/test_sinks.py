@@ -316,3 +316,33 @@ LiftJob:
     files = glob.glob(f"{path}/part-*.parquet")
     assert len(files) == 4  # 1000 rows / 250 per shard from ONE task
     assert spark.read.parquet(path).count() == 1000
+
+
+def test_rewrite_keeps_old_table_when_move_in_fails(spark, tmp_path, monkeypatch):
+    """The fallback rewrite renames the old table aside before the new
+    one moves in; a failed move-in puts it back, so the path never
+    loses its table, and a successful one leaves no sibling behind."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "t")
+    table = ManagedTable(spark, path, fmt="parquet")
+    table.write(spark.createDataFrame([(1,), (2,)], "id BIGINT"), mode="overwrite")
+    table.update(F.col("id") == 2, {"id": F.lit(3).cast("bigint")})
+    assert sorted(r.id for r in table.read().collect()) == [1, 3]
+    assert os.listdir(tmp_path) == ["t"]
+
+    real_replace = os.replace
+
+    def failing_move_in(src, dst):
+        if "__getl_tmp_" in str(src) and str(dst) == path:
+            raise OSError("move-in failed")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", failing_move_in)
+    with pytest.raises(OSError, match="move-in failed"):
+        table.update(F.col("id") == 1, {"id": F.lit(4).cast("bigint")})
+    monkeypatch.undo()
+    assert sorted(r.id for r in table.read().collect()) == [1, 3]
+    assert os.listdir(tmp_path) == ["t"]
