@@ -10205,7 +10205,7 @@ def _q_corpus_curation_full(spark, sf_dir):
     individually driver/oracle-verified; THIS query exists to price
     cross-operator plan growth (pins, AQE re-planning, checkpoint
     barriers between stages) that per-stage benches never see —
-    bench row + docs/PLANS.md dump + docs/SCALE.md note."""
+    bench row + tools/dump_plans.py dump + docs/SCALE.md note."""
     from getl_spark.functions import dedup, sample, text
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")

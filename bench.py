@@ -439,7 +439,7 @@ def main() -> None:
             timings[name] = min(times)
         print(f"# {name}: {rows} rows in {min(times):.2f}s {times}", file=sys.stderr)
 
-    # Full detail (per-run arrays, medians, variance rationale) goes to
+    # Full detail (per-run arrays, medians) goes to
     # stderr and BENCH_DETAIL.json — the driver's tail capture keeps
     # only the last ~2000 chars of stdout, and round 7's verbose line
     # overflowed that window and hid the TPC-H headliners. The LAST
@@ -449,38 +449,6 @@ def main() -> None:
         "runs": runs,
         "runs_per_query": {"default": RUNS, "micro": MICRO_RUNS},
         "micro_threshold_sec": MICRO_THRESHOLD_SEC,
-        "variance_note": (
-            "per-query min; 3 runs, widened to 5 for queries whose "
-            "min lands under 0.7 s (sub-second timings are "
-            "noise-dominated: r01->r02 showed uniform +-20-50% "
-            "swings on untouched pure-SQL queries; r4->r5 flagged "
-            "six 50-80 ms deltas that were machine noise). Medians "
-            "+ raw runs here so cross-round deltas can be "
-            "separated from variance. r7 deliberate delta: "
-            "quota_filter_batch and sample_token_budget pay ~0.2 s "
-            "of extra stages for the distributed grouped prefix "
-            "sum (a keyed window collapsed parallelism to the "
-            "number of quota keys/sources at 100 TB; see "
-            "docs/SCALE.md and common/scale.py). r8: the new "
-            "prefix-scan stats family (auc/ap/spearman/mad/cusum) "
-            "carries 1.5-3 s of fixed per-median/per-scan "
-            "scheduling overhead at sf0.1 by design — exactness "
-            "with bounded memory at any group size; see "
-            "docs/SCALE.md 'Eval aggregates'. Cross-round "
-            "comparisons should be read CANARY-RELATIVE: divide "
-            "each query delta by the cpu-canary ratio between the "
-            "two rounds before calling a regression (r8's uniform "
-            "1.38x drift was environment, not code). r10: the "
-            "dedup_stored_index/dedup_cdc_stored_index composites "
-            "are split into *_build / *_query rows so the "
-            "per-increment query leg is visible; the *_merge_* rows "
-            "are END-TO-END by design (build A + build B + merge + "
-            "query) — consolidation is once-per-period, not "
-            "per-increment, so the composite total is the number a "
-            "capacity plan needs. "
-            "r11: text_bigram_logprob's r10 canary-relative blip (0.87->1.11 s) did NOT recur — back to 0.79 s min at a flat cpu canary, confirming machine noise (the r10 diff never touched the logprob paths); watch substring_dedup instead (1.12->1.55 s this round, nothing in the r11 diff touches it). The *_merge_only rows self-build their per-period indexes on the FIRST run only, so their medians price the consolidation-cron steady state (merge + one query against persisted indexes); the two *_health oracle rows rebuild their SQL-expressible fixture index every run by design (a correctness row must never read a stale fixture), so their medians are fixture-write-dominated — the health read itself is O(index files). graph_hits prices 6 full HITS iterations (2 edge-sized keyed shuffles + 2 one-row normalization aggs each) — stage-count-dominated at sf0.1, the same accepted shape as pagerank. "
-            "r13: the q17_small_quantity_revenue watch CLOSES as noise — 0.68 s this round vs 0.74 (r12) / 0.60 (r11) at a flat cpu canary and a 1.3x SLOWER scan canary (it improved against the disk headwind; the r12 blip was warmup). text_lang_mix/text_script_id now count 13 script ranges (was 7) at unchanged cost: the per-script regexp counts are staged as intermediate columns, keeping the projection inside whole-stage codegen (inlining 13 counts into the CASE tree blew Janino's 64 KB method limit and silently dropped to interpreted). graph_personalized_pagerank prices 6 fixed iterations, one propagation direction — the same stage-count-dominated shape as pagerank/hits (hits runs 2 directions, hence ~1.4x ppr). The q21_sole_returner watch CLOSES within the round: the final r13 bench has it at 0.88 s vs 0.76 baseline (1.16x raw) under a 1.36x slower cpu canary — inside the drift, did not recur canary-relative."
-        ),
         "canary": canary,
     }
     print(json.dumps(detail), file=sys.stderr)

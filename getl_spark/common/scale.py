@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window, functions as F
 
 
 def is_classic(df: DataFrame) -> bool:
@@ -64,10 +64,7 @@ def pin(df: DataFrame, eager: bool = True) -> DataFrame:
     (cleaned per Spark's own policy); localCheckpoint blocks — both
     rungs 2 and 3 — are freed by the ContextCleaner once the frame is
     dereferenced, so loops that rebind per round release superseded
-    rounds automatically. Iterative callers should still call
-    :func:`unpin` on superseded frames: it is the explicit release
-    point (and frees eagerly if a future rung ever registers with the
-    cache manager again).
+    rounds automatically.
     """
     if not is_classic(df):
         # Connect proxies expose localCheckpoint but no SparkContext
@@ -83,30 +80,6 @@ def pin(df: DataFrame, eager: bool = True) -> DataFrame:
     return df.localCheckpoint(
         eager=eager, storageLevel=StorageLevel.MEMORY_AND_DISK_2
     )
-
-
-def unpin(df: DataFrame) -> None:
-    """Release a frame previously returned by :func:`pin`, for callers
-    that supersede pins in a loop.
-
-    With the current ladder every rung truncates lineage checkpoint-
-    style, so block lifetime is handled by Spark (checkpoint-dir
-    policy / ContextCleaner on dereference) and ``unpersist`` finds no
-    cache-manager entry — a harmless no-op. unpin exists as the
-    explicit release point regardless: it documents where a pin's
-    lifetime ends, and it frees eagerly if a rung that registers with
-    the cache manager (persist-style) is ever reintroduced. Safe to
-    call on never-pinned frames; non-blocking.
-
-    Call it only after the successor pin has materialized (pin is
-    eager by default).
-    """
-    if not is_classic(df):
-        return
-    try:
-        df.unpersist()
-    except Exception:  # pragma: no cover - defensive: never fail a loop
-        pass
 
 
 def parallelize(df: DataFrame) -> DataFrame:
@@ -170,8 +143,6 @@ def _sample_range_bounds(ck, cols, n_buckets):
     deduped list of at most ``n_buckets - 1`` tuples.
     """
     import math
-
-    from pyspark.sql import functions as F
 
     K = 20
     S = 16  # deterministic 1-in-S row pre-sample ahead of the agg
@@ -242,8 +213,6 @@ def _bucket_expr(bounds, fields, rs):
     ``when`` tree: log2(len(bounds)) struct comparisons per row. Spark
     struct comparison is a total order with NULL-first / NaN-last per
     field, matching the sampler's sort key."""
-    from pyspark.sql import functions as F
-
     blits = [
         F.struct(
             *[
@@ -323,8 +292,6 @@ def grouped_prefix_scan(
     full-data hash exchange for the window, because the planner cannot
     know a physical partition id clusters with physical partitions.
     """
-    from pyspark.sql import Window, functions as F
-
     keys = [keys] if isinstance(keys, str) else list(keys)
     order_cols = (
         [order_cols] if isinstance(order_cols, str) else list(order_cols)
@@ -489,6 +456,65 @@ def grouped_prefix_scan(
         *[f"__gps_local_{i}" for i in range(len(value_cols))],
         *[f"__gps_off_{i}" for i in range(len(value_cols))],
     )
+
+
+def keys_of(group_by) -> list:
+    """Group-key list of a ``group_by`` argument: None (no keys), one
+    column name, or a list/tuple of names."""
+    if group_by is None:
+        return []
+    return [group_by] if isinstance(group_by, str) else list(group_by)
+
+
+def join_on_keys(rows: DataFrame, per_group: DataFrame, keys) -> DataFrame:
+    """Attach a per-group table (one row per ``keys`` value) to
+    ``rows`` on the group keys, NULL-safe: a NULL group key is a real
+    group, which a name-list join would drop. ``per_group``'s key
+    columns are renamed first so the join never has two same-named
+    columns (both sides often share lineage), and dropped after it.
+    With no keys ``per_group`` is one row, attached by broadcast."""
+    if not keys:
+        return rows.join(F.broadcast(per_group))
+    renamed = per_group.select(
+        *[
+            F.col(c).alias(f"__jk_{c}") if c in keys else F.col(c)
+            for c in per_group.columns
+        ]
+    )
+    cond = F.lit(True)
+    for k in keys:
+        cond = cond & F.col(k).eqNullSafe(F.col(f"__jk_{k}"))
+    return rows.join(renamed, cond).drop(*[f"__jk_{k}" for k in keys])
+
+
+def value_ranks(
+    counts: DataFrame, keys, value_col, n_col, prepinned: bool = False
+) -> DataFrame:
+    """Exact per-group midranks over a pre-aggregated
+    ``(keys..., value_col, n_col)`` counts table (one row per distinct
+    value and its row count). Adds ``__cum``, the rows at or below the
+    value (the distributed prefix sum of ``n_col`` in value order),
+    and ``__rank``, the average rank of the value's tied rows,
+    ``cum − n + (n + 1)/2``. ``prepinned`` is passed to
+    :func:`grouped_prefix_sum`."""
+    cum = grouped_prefix_sum(
+        counts, keys, [value_col], n_col, "__cum", prepinned=prepinned
+    )
+    return cum.withColumn(
+        "__rank",
+        (F.col("__cum") - F.col(n_col)).cast("double")
+        + (F.col(n_col) + 1) / F.lit(2.0),
+    )
+
+
+def binary_label(y, message: str):
+    """``y`` (a 0/1 label Column) with a guard that fails the query
+    with ``message`` on any value outside {0, 1}. The guard rides the
+    value itself, so it fires for every row that reaches the
+    expression, before any aggregate can drop the row. Filter NULL
+    labels out first: ``assert_true`` also fails on a NULL label."""
+    guard = F.assert_true(y.isin(0, 1), F.lit(message))
+    return y + F.coalesce(guard.cast("bigint"), F.lit(0))
 
 
 def local_df(spark, rows, schema):

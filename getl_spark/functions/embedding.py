@@ -16,6 +16,8 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
 
+from getl_spark.common.scale import join_on_keys, keys_of
+
 
 def _norm_expr(vec_col: str) -> "F.Column":
     return F.sqrt(
@@ -1131,11 +1133,7 @@ def diversity(
     join. 100 TB of embeddings costs one scan; no pair join, no
     driver collection.
     """
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     base = df.where(F.col(vec_col).isNotNull()).select(
         *keys, F.col(vec_col).alias("__v")
     )
@@ -1176,16 +1174,7 @@ def diversity(
         ).alias("__sq"),
         F.count_distinct(F.size("__v")).alias("__nd"),
     )
-    if keys:
-        ds = dimsum.select(
-            *[F.col(c).alias(f"__ds_{c}") for c in keys], "__ssum2"
-        )
-        cond = F.lit(True)
-        for k in keys:
-            cond = cond & rowstats[k].eqNullSafe(ds[f"__ds_{k}"])
-        j = rowstats.join(ds, cond).drop(*[f"__ds_{k}" for k in keys])
-    else:
-        j = rowstats.join(F.broadcast(dimsum))
+    j = join_on_keys(rowstats, dimsum, keys)
     guard = F.assert_true(
         F.col("__nd") <= 1,
         F.lit(

@@ -28,7 +28,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from getl_spark.common.scale import pin, unpin, local_df
+from getl_spark.common.scale import pin, local_df
 
 
 def _signature(edges: DataFrame) -> tuple:
@@ -179,10 +179,6 @@ def cluster_components(
         )
         e_new = small.transform(pin)
         sig = _signature(e_new)
-        # e_new is materialized (eager pin) — release the superseded
-        # round so the persist rung does not accumulate per-iteration
-        # replicated blocks for the session lifetime
-        unpin(e)
         e = e_new
         if sig == prev_sig:
             break
@@ -331,7 +327,6 @@ def pagerank(
     # the contribution join + partial-agg shuffle (r13; the per-row
     # rank*w/deg expression is unchanged, so values are bit-identical)
     ew = pin(e.join(outdeg, "u"))
-    unpin(e)  # node_set/outdeg/ew are materialized; e is no longer read
     ranks = node_set.select("node", "__dang", F.lit(1.0 / n).alias("rank"))
     for _ in range(n_iter):
         dangling = ranks.where(F.col("__dang")).agg(
@@ -361,10 +356,6 @@ def pagerank(
             )
             .transform(pin)
         )
-        # release the superseded round's pin (no-op on the unpinned
-        # initial ranks frame); node_set/outdeg/ew stay pinned — every
-        # iteration rejoins them
-        unpin(ranks)
         ranks = new_ranks
     out = ranks.select(F.col("node").alias(node_col), F.col("rank").alias(out_col))
     if round_to is not None:
@@ -517,7 +508,7 @@ def hits(
     whenever the graph has an edge (hub mass only ever lands on
     nodes with out-edges, auth mass on nodes with in-edges), so no
     division guard can fire mid-loop. Per-iteration pins keep the
-    lineage flat with superseded frames unpinned.
+    lineage flat.
     """
     if n_iter < 1:
         raise ValueError(f"hits: n_iter must be >= 1, got {n_iter}")
@@ -541,7 +532,6 @@ def hits(
         node_set.distinct().select(F.col("u").alias("node")).transform(pin)
     )
     if e.limit(1).count() == 0:
-        unpin(e)
         out = node_set.select(
             F.col("node").alias(node_col),
             F.lit(0.0).alias("hub"),
@@ -552,8 +542,6 @@ def hits(
     # iteration 1 on, score frames are restricted to the nodes the
     # edge joins can actually reach — see the 100 TB note above.
     hubs = node_set.select("node", F.lit(1.0).alias("hub"))
-    hubs_pinned = None  # the loop's own pin for the current hub frame
-    auths_pinned = None
     auths = None
     for it in range(n_iter):
         # unnormalized auth mass per in-node; pinned so the total, the
@@ -576,9 +564,6 @@ def hits(
         new_auths = auth_un.select(
             F.col("v").alias("node"), (F.col("s") / F.lit(tot_a)).alias("auth")
         )
-        if auths_pinned is not None:
-            unpin(auths_pinned)
-        auths_pinned = auth_un
         auths = new_auths
         hub_un = pin(
             e.join(auths, e["v"] == auths["node"])
@@ -606,14 +591,9 @@ def hits(
                 .collect()[0]["d"]
             )
             converged = delta is not None and delta < tol
-        if hubs_pinned is not None:
-            unpin(hubs_pinned)
-        hubs_pinned = hub_un
         hubs = new_hubs
         if converged:
             break
-    # the loop's last pins carry the scores; the edge pin is done
-    unpin(e)
     # fold the leading zeros back in exactly once: nodes without
     # out-edges have hub 0, without in-edges auth 0 — the two joins the
     # loop used to pay per half-iteration
@@ -972,9 +952,6 @@ def k_core(
         deg = sym.groupBy("u").agg(F.count("*").cast("bigint").alias("__d"))
         bad = deg.where(F.col("__d") < k).select("u").transform(pin)
         if not bad.limit(1).collect():
-            # the returned frame derives from e (kept pinned); bad is
-            # dead weight — release it before handing the plan back
-            unpin(bad)
             return deg.select(
                 F.col("u").alias(node_col),
                 F.col("__d").alias("core_degree"),
@@ -987,9 +964,6 @@ def k_core(
             .select("u", "v")
             .transform(pin)
         )
-        # e_new materialized — release the peeled round's pins
-        unpin(bad)
-        unpin(e)
         e = e_new
     raise RuntimeError(
         f"k_core: did not stabilize within max_iter={max_iter} rounds "
@@ -1139,8 +1113,7 @@ def label_propagation(
     list, key = neighbor id) and one two-level aggregation
     (node×label count → per-node argmax via a (count, −label) max
     struct) — two keyed shuffles per round, shuffle width ∝ |E|.
-    Iterations pin (``common.scale.pin``) to truncate lineage; prior
-    rounds unpin once the next materializes.
+    Iterations pin (``common.scale.pin``) to truncate lineage.
     """
     if max_iter < 1:
         raise ValueError("label_propagation: max_iter must be >= 1")
@@ -1177,11 +1150,8 @@ def label_propagation(
                 (-F.col("__best.__neg")).alias("label"),
             )
         )
-        unpin(labels)
         labels = new_labels
-    out = labels.select("node", "label")
-    unpin(sym)
-    return out
+    return labels.select("node", "label")
 
 
 def adamic_adar(
@@ -1386,11 +1356,9 @@ def bfs_distances(
             .transform(pin)
         )
         levels.append(frontier)
-    out = reduce(DataFrame.union, levels).select(
+    return reduce(DataFrame.union, levels).select(
         F.col("node").alias(node_col), "dist"
     )
-    unpin(e)
-    return out
 
 
 def personalized_pagerank(
@@ -1438,9 +1406,9 @@ def personalized_pagerank(
     per iteration one ``ew``⋈ranks keyed join + one dst-keyed partial
     agg, the dangling mass a filter + 1-row aggregate over the pinned
     rank frame (the node frame carries the dangling flag) broadcast
-    via crossJoin, per-iteration pins with superseded frames
-    unpinned. The teleport column rides on the pinned node frame, so
-    personalization adds ZERO extra shuffles over standard PageRank.
+    via crossJoin, per-iteration pins. The teleport column rides on
+    the pinned node frame, so personalization adds ZERO extra shuffles
+    over standard PageRank.
     """
     if not 0.0 < damping < 1.0:
         raise ValueError(f"damping must be in (0, 1), got {damping}")
@@ -1501,7 +1469,6 @@ def personalized_pagerank(
     # per-edge out-degree attached once (pagerank's r13 hoist): the
     # loop's only edge-sized work is the contribution join + partial agg
     ew = pin(e.join(outdeg, "u"))
-    unpin(e)
     ranks = node_set.select("node", "t", "__dang", F.col("t").alias("rank"))
     for _ in range(n_iter):
         dangling = ranks.where(F.col("__dang")).agg(
@@ -1533,14 +1500,12 @@ def personalized_pagerank(
             )
             .transform(pin)
         )
-        unpin(ranks)
         ranks = new_ranks
     out = ranks.select(
         F.col("node").alias(node_col), F.col("rank").alias(out_col)
     )
     if round_to is not None:
         out = out.withColumn(out_col, F.round(F.col(out_col), round_to))
-    unpin(seed_set)
     return out
 
 

@@ -19,6 +19,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
+from getl_spark.common.scale import keys_of
+
 
 def zscore(
     df: DataFrame,
@@ -79,11 +81,7 @@ def winsorize(
 
     from getl_spark.functions import stats
 
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     out_col = new_col or f"{value_col}_winsorized"
     q = stats.quantiles(
         df, value_col, qs=(float(lower), float(upper)), group_by=keys or None,
@@ -146,11 +144,7 @@ def robust_zscore(
 
     from getl_spark.functions import stats
 
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     out_col = new_col or f"{value_col}_robust_z"
     m = stats.mad(df, value_col, group_by=keys or None, round_to=round_to)
     if keys:

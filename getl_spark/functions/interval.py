@@ -26,6 +26,8 @@ from typing import Optional, Sequence, Union
 
 from pyspark.sql import DataFrame, functions as F
 
+from getl_spark.common.scale import grouped_prefix_scan, keys_of, pin
+
 _CLOSED = {"both", "left", "right", "neither"}
 
 
@@ -204,13 +206,7 @@ def merge(
     Intervals with NULL endpoints are excluded; ``end < start`` rows
     are rejected loudly.
     """
-    from getl_spark.common.scale import grouped_prefix_scan
-
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     s = F.col(start_col).cast("double")
     e = F.col(end_col).cast("double")
     guard = F.assert_true(
@@ -265,18 +261,12 @@ def coverage(
     where ``span`` is last end − first start and ``largest_gap`` the
     widest uncovered hole between islands (NULL when one island).
     """
-    from getl_spark.common.scale import grouped_prefix_scan, pin
-
     # pinned: the prefix scan's repartitionByRange samples its child
     # in an extra pass, so an unpinned islands frame re-runs the WHOLE
     # merge machinery (its own range exchange, pin and offsets join)
     # twice (r13); islands is merged-interval-sized, ≤ input rows
     islands = pin(merge(df, start_col, end_col, group_by, min_gap))
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     prev_end = grouped_prefix_scan(
         islands, keys, ["island"], "end", "__prev_end",
         fn="max", inclusive=False, prepinned=True,
@@ -335,16 +325,10 @@ def gaps(
     gap folds from a per-group 1-row aggregate. No windows over raw
     rows, no per-group buffering.
     """
-    from getl_spark.common.scale import grouped_prefix_scan, pin
-
     # pinned: same reason as coverage() — an unpinned islands frame
     # re-runs the whole merge machinery for the range-bounds sample
     islands = pin(merge(df, start_col, end_col, group_by, min_gap))
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     prev_end = grouped_prefix_scan(
         islands, keys, ["island"], "end", "__prev_end",
         fn="max", inclusive=False, prepinned=True,

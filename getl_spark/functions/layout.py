@@ -31,6 +31,8 @@ from typing import List, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from getl_spark.common.scale import grouped_prefix_sum, keys_of
+
 _NUMERIC = ("int", "bigint", "smallint", "tinyint", "float", "double", "decimal")
 
 
@@ -390,16 +392,10 @@ def compaction_plan(
     column), so a million-file listing never funnels through one
     task or a few-key window.
     """
-    from getl_spark.common.scale import grouped_prefix_sum
-
     if target <= 0:
         raise ValueError(f"compaction_plan: target must be > 0, got {target}")
     thresh = int(target if leave_if_at_least is None else leave_if_at_least)
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     size = F.col(size_col).cast("bigint")
     guard = F.assert_true(
         size.isNotNull() & (size >= 0),

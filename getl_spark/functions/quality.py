@@ -36,7 +36,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
 
-from getl_spark.common.scale import pin, local_df
+from getl_spark.common.scale import binary_label, keys_of, local_df, pin
 
 from getl_spark.functions.embedding import hash_embed
 
@@ -375,18 +375,12 @@ def label_noise(
     back, flags are codegen expressions — one scan plus a tiny join,
     no per-row Python.
     """
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     s = F.col(score_col).cast("double")
     y = F.col(label_col).cast("bigint")
-    guard = F.assert_true(
-        y.isin(0, 1),
-        F.lit("quality.label_noise: label column must be binary 0/1"),
+    checked = binary_label(
+        y, "quality.label_noise: label column must be binary 0/1"
     )
-    checked = y + F.coalesce(guard.cast("bigint"), F.lit(0))
     valid = s.isNotNull() & ~F.isnan(s) & y.isNotNull()
     thresholds = (
         df.where(valid)

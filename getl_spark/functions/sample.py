@@ -762,10 +762,9 @@ def kcenter(
     running min-distance column makes each pass O(d) per row
     regardless of step (not O(k·d)): ``mind`` folds via
     ``least(mind, dist-to-newest-center)`` and the frame re-pins
-    every step (superseded pins released via ``unpin``), keeping
-    lineage flat. k is capped by ``max_k`` (loud) — at corpus scale
-    pre-reduce with ``hash_fraction`` or per-cell sampling first,
-    then kcenter the reduced pool.
+    every step, keeping lineage flat. k is capped by ``max_k``
+    (loud) — at corpus scale pre-reduce with ``hash_fraction`` or
+    per-cell sampling first, then kcenter the reduced pool.
     """
     if k < 1:
         raise ValueError(f"kcenter: k must be >= 1, got {k}")
@@ -777,7 +776,7 @@ def kcenter(
         )
     if metric not in ("l2", "cosine"):
         raise ValueError(f"kcenter: unknown metric {metric!r}")
-    from getl_spark.common.scale import pin, unpin
+    from getl_spark.common.scale import pin
 
     base = (
         df.where(F.col(id_col).isNotNull() & F.col(vec_col).isNotNull())
@@ -831,7 +830,6 @@ def kcenter(
     state = base.select(
         "__id", "__v", dist_to(center).alias("__mind")
     ).transform(pin)
-    unpin(base)
     for _ in range(1, k):
         nxt = (
             state.orderBy(F.desc("__mind"), F.asc("__id")).limit(1).collect()
@@ -845,9 +843,7 @@ def kcenter(
             "__v",
             F.least(F.col("__mind"), dist_to(row["__v"])).alias("__mind"),
         ).transform(pin)
-        unpin(state)
         state = new_state
-    unpin(state)
     spark = df.sparkSession
     id_type = df.schema[id_col].dataType.simpleString()
     out = local_df(spark,

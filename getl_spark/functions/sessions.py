@@ -14,6 +14,8 @@ from typing import List, Optional, Sequence
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from getl_spark.common.scale import keys_of, local_df, pin
+
 _ALLOWED_AGGS = ("sum", "avg", "min", "max", "count")
 
 
@@ -682,11 +684,7 @@ def resample(
         )
     if step_s <= 0:
         raise ValueError(f"resample: step_s must be > 0, got {step_s}")
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     step_us = int(step_s) * 1_000_000
     us = F.unix_micros(F.col(ts_col).cast("timestamp"))
     bucket = ((us - F.pmod(us, F.lit(step_us))) / F.lit(step_us)).cast(
@@ -992,14 +990,12 @@ def markov_attribution(
         .groupBy(F.col("tr.src").alias("src"), F.col("tr.dst").alias("dst"))
         .agg(F.count("*").cast("bigint").alias("n"))
     )
-    from getl_spark.common.scale import pin, unpin, local_df
 
     trans = trans.transform(pin)
     k = (
         trans.select("src").where(F.col("src") != START).distinct().count()
     )
     if k > max_channels:
-        unpin(trans)
         raise ValueError(
             f"markov_attribution: {k} distinct channels exceeds "
             f"max_channels={max_channels} — the absorption solves are "
@@ -1007,7 +1003,6 @@ def markov_attribution(
             "the long tail upstream"
         )
     rows = trans.collect()
-    unpin(trans)
     spark = df.sparkSession
     if not rows:
         return local_df(spark,

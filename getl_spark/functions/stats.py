@@ -10,7 +10,17 @@ from typing import List, Optional
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from getl_spark.common.scale import pin, local_df
+from getl_spark.common.scale import (
+    binary_label,
+    grouped_prefix_scan,
+    grouped_prefix_sum,
+    join_on_keys,
+    keys_of,
+    local_df,
+    parallelize,
+    pin,
+    value_ranks,
+)
 
 
 def profile(df: DataFrame, columns: Optional[List[str]] = None) -> DataFrame:
@@ -786,11 +796,7 @@ def moments(
     wrong kurtosis. NULL values are excluded; groups with n < 2 or
     zero variance emit NULL shape columns.
     """
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     v = F.col(value_col).cast("double")
     base = df.where(v.isNotNull()).select(*keys, v.alias("__mo_v"))
     means = base.groupBy(*keys).agg(
@@ -1735,8 +1741,6 @@ def bootstrap_ci(
         raise ValueError(
             f"bootstrap_ci: unknown hash_fn '{hash_fn}' (xxhash64|md5)"
         )
-    from getl_spark.common.scale import parallelize
-
     # NULL metric rows must be excluded BEFORE the explode: a NULL x
     # drops out of the replicate numerator sum(w*x) but its Poisson
     # weight would still count in the denominator sum(w), biasing
@@ -1867,8 +1871,6 @@ def permutation_test(
         raise ValueError(
             f"permutation_test: unknown hash_fn '{hash_fn}' (xxhash64|md5)"
         )
-    from getl_spark.common.scale import parallelize
-
     g = F.col(group_col)
     rows = parallelize(
         df.where(
@@ -2058,8 +2060,6 @@ def trimmed_mean(
         raise ValueError(
             f"trimmed_mean: trim must be in [0, 0.5), got {trim}"
         )
-    from getl_spark.common.scale import grouped_prefix_sum
-
     vals = df.where(F.col(value_col).isNotNull()).withColumn(
         "__tm_one", F.lit(1).cast("bigint")
     )
@@ -2124,8 +2124,6 @@ def mann_whitney(
     value order, and the tie-correction term ``Σ(t³−t)`` folds in the
     same pass. Totals attach as a 1-row broadcast.
     """
-    from getl_spark.common.scale import grouped_prefix_sum
-
     lc = (
         left.where(F.col(column).isNotNull())
         .select(F.col(column).cast("double").alias("v"))
@@ -2180,22 +2178,12 @@ def mann_whitney(
     ).otherwise(F.lit(0.0))
     var = n1 * n2 / F.lit(12.0) * ((n + 1).cast("double") - tie_term)
     z = F.when(var > 0, (F.col("u_stat") - mu) / F.sqrt(var))
-    x = F.abs(z) / F.lit(2.0) ** F.lit(0.5)
-    tt = F.lit(1.0) / (F.lit(1.0) + F.lit(0.3275911) * x)
-    poly = (
-        F.lit(0.254829592) * tt
-        - F.lit(0.284496736) * tt ** F.lit(2)
-        + F.lit(1.421413741) * tt ** F.lit(3)
-        - F.lit(1.453152027) * tt ** F.lit(4)
-        + F.lit(1.061405429) * tt ** F.lit(5)
-    )
-    p = poly * F.exp(-(x * x))
     return agg.select(
         "n_left",
         "n_right",
         F.round("u_stat", round_to).alias("u_stat"),
         F.round(z, round_to).alias("z"),
-        F.round(p, round_to).alias("p_value"),
+        F.round(_normal_two_sided_p(z), round_to).alias("p_value"),
     )
 
 
@@ -2223,8 +2211,6 @@ def wilcoxon(
     over |d| order, and the tie term ``Σ(t³−t)`` folds into the same
     pass; the zero-pair count attaches as a 1-row broadcast.
     """
-    from getl_spark.common.scale import grouped_prefix_sum
-
     d = (
         df.select(
             F.col(left_col).cast("double").alias("a"),
@@ -2245,14 +2231,12 @@ def wilcoxon(
     zeros = counts.where(F.col("ad") == 0).agg(
         F.coalesce(F.sum("t"), F.lit(0)).cast("bigint").alias("n_zeros")
     )
-    cum = grouped_prefix_sum(
-        counts.where(F.col("ad") > 0), [], ["ad"], "t", "cum",
-        prepinned=True,
+    ranked = value_ranks(
+        counts.where(F.col("ad") > 0), [], "ad", "t", prepinned=True
     )
-    midrank = (F.col("cum") - F.col("t")) + (F.col("t") + F.lit(1)) / F.lit(2.0)
-    agg = cum.select(
+    agg = ranked.select(
         "t",
-        (F.col("npos") * midrank).alias("w_part"),
+        (F.col("npos") * F.col("__rank")).alias("w_part"),
         (F.col("t") ** 3 - F.col("t")).alias("tie_part"),
     ).agg(
         F.coalesce(F.sum("t"), F.lit(0)).cast("bigint").alias("n_pairs"),
@@ -2307,20 +2291,10 @@ def auc(
     counts); rows with a null score or null label are excluded.
     ``auc`` is NULL for a group missing either class.
     """
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     s = F.col(score_col).cast("double")
     y = F.col(label_col).cast("bigint")
-    guard = F.assert_true(
-        y.isin(0, 1),
-        F.lit("stats.auc: label column must be binary 0/1"),
-    )
-    # the guard rides the label expression so it fires for every
-    # non-null label before any aggregation can drop the row
-    checked = y + F.coalesce(guard.cast("bigint"), F.lit(0))
+    checked = binary_label(y, "stats.auc: label column must be binary 0/1")
     counts = (
         df.where(s.isNotNull() & y.isNotNull())
         .groupBy(*keys, s.alias("__v"))
@@ -2329,8 +2303,6 @@ def auc(
             F.sum(F.lit(1) - checked).cast("bigint").alias("__nn"),
         )
     )
-    from getl_spark.common.scale import grouped_prefix_sum
-
     cum = grouped_prefix_sum(counts, keys, ["__v"], "__nn", "__cum_n")
     contrib = cum.select(
         *keys,
@@ -2387,18 +2359,12 @@ def average_precision(
     ``auc``); rows with a null score or label are excluded.
     ``average_precision`` is NULL for a group with no positives.
     """
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     s = F.col(score_col).cast("double")
     y = F.col(label_col).cast("bigint")
-    guard = F.assert_true(
-        y.isin(0, 1),
-        F.lit("stats.average_precision: label column must be binary 0/1"),
+    checked = binary_label(
+        y, "stats.average_precision: label column must be binary 0/1"
     )
-    checked = y + F.coalesce(guard.cast("bigint"), F.lit(0))
     counts = (
         df.where(s.isNotNull() & y.isNotNull())
         .groupBy(*keys, s.alias("__v"))
@@ -2409,8 +2375,6 @@ def average_precision(
         # thresholds descend; the ascending prefix sum orders on -score
         .withColumn("__negv", -F.col("__v"))
     )
-    from getl_spark.common.scale import grouped_prefix_sum
-
     cum = grouped_prefix_sum(
         counts, keys, ["__negv"], ["__np", "__nn"], ["__cp", "__cn"]
     )
@@ -2465,13 +2429,7 @@ def spearman(
     partial agg. Rows with a NULL or NaN on either side are excluded.
     ``spearman`` is NULL when n < 2 or either side is constant.
     """
-    from getl_spark.common.scale import grouped_prefix_sum
-
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     x = F.col(col_x).cast("double")
     y = F.col(col_y).cast("double")
     base = df.select(*keys, x.alias("__x"), y.alias("__y")).where(
@@ -2484,14 +2442,8 @@ def spearman(
         counts = base.groupBy(*keys, F.col(col)).agg(
             F.count("*").cast("bigint").alias("__n")
         )
-        cum = grouped_prefix_sum(counts, keys, [col], "__n", "__cum")
-        return cum.select(
-            *keys,
-            col,
-            (
-                (F.col("__cum") - F.col("__n")).cast("double")
-                + (F.col("__n") + 1) / F.lit(2.0)
-            ).alias(out),
+        return value_ranks(counts, keys, col, "__n").select(
+            *keys, col, F.col("__rank").alias(out)
         )
 
     # rank tables are value-keyed (∝ distinct values); attaching them
@@ -2562,20 +2514,9 @@ def _median_from_counts(
     """`_grouped_exact_median` core over a pre-aggregated
     ``(keys..., value, __n)`` table — callers that already hold counts
     (e.g. the MAD deviation pass) skip the row scan entirely."""
-    from getl_spark.common.scale import grouped_prefix_sum
-
     cum = grouped_prefix_sum(counts, keys, [value_col], "__n", "__cum")
     totals = counts.groupBy(*keys).agg(F.sum("__n").alias("__tot"))
-    if keys:
-        t = totals.select(
-            *[F.col(k).alias(f"__md_{k}") for k in keys], "__tot"
-        )
-        cond = F.lit(True)
-        for k in keys:
-            cond = cond & F.col(k).eqNullSafe(F.col(f"__md_{k}"))
-        joined = cum.join(t, cond).drop(*[f"__md_{k}" for k in keys])
-    else:
-        joined = cum.join(F.broadcast(totals))
+    joined = join_on_keys(cum, totals, keys)
     lo = F.floor((F.col("__tot") + 1) / 2)
     hi = F.floor(F.col("__tot") / 2) + 1
     lo_in = (F.col("__cum") >= lo) & (F.col("__cum") - F.col("__n") < lo)
@@ -2618,11 +2559,7 @@ def mad(
     rows again. Even-count groups use the standard
     mean-of-two-middles; NULL/NaN rows are excluded.
     """
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     x = F.col(column).cast("double")
     base = df.select(*keys, x.alias("__x")).where(
         x.isNotNull() & ~F.isnan(x)
@@ -2636,18 +2573,7 @@ def mad(
         .transform(pin)
     )
     med = _median_from_counts(counts, keys, "__x")
-    if keys:
-        m = med.select(
-            *[F.col(k).alias(f"__m_{k}") for k in keys],
-            "__med_n",
-            "__median",
-        )
-        cond = F.lit(True)
-        for k in keys:
-            cond = cond & F.col(k).eqNullSafe(F.col(f"__m_{k}"))
-        withmed = counts.join(m, cond).drop(*[f"__m_{k}" for k in keys])
-    else:
-        withmed = counts.join(F.broadcast(med))
+    withmed = join_on_keys(counts, med, keys)
     # distinct deviations can coincide (v and 2·median − v) — re-sum
     dev_counts = (
         withmed.groupBy(
@@ -2695,11 +2621,7 @@ def cohens_kappa(
     are excluded (an abstaining judge is absence, not a verdict);
     labels compare as strings.
     """
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     a = F.col(rater_a).cast("string")
     b = F.col(rater_b).cast("string")
     cells = (
@@ -2736,16 +2658,7 @@ def cohens_kappa(
         .groupBy(*[F.col(f"__am_{k}").alias(k) for k in keys])
         .agg(F.sum(F.col("__na") * F.col("__nb")).alias("__pe_num"))
     )
-    if keys:
-        p = pe_num.select(
-            *[F.col(k).alias(f"__pe_{k}") for k in keys], "__pe_num"
-        )
-        jcond = F.lit(True)
-        for k in keys:
-            jcond = jcond & F.col(k).eqNullSafe(F.col(f"__pe_{k}"))
-        joined = totals.join(p, jcond).drop(*[f"__pe_{k}" for k in keys])
-    else:
-        joined = totals.join(F.broadcast(pe_num))
+    joined = join_on_keys(totals, pe_num, keys)
     n = F.col("n").cast("double")
     po = F.coalesce(F.col("__agree"), F.lit(0)).cast("double") / n
     pe = F.col("__pe_num").cast("double") / (n * n)
@@ -2851,11 +2764,7 @@ def binary_metrics(
     result. MCC's denominator is computed in doubles — the four
     marginal products overflow a bigint at ~3e9 rows per cell.
     """
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     l_ = F.col(label_col).cast("boolean")
     p_ = F.col(pred_col).cast("boolean")
     both = l_.isNotNull() & p_.isNotNull()
@@ -2988,13 +2897,7 @@ def cusum(
     ``order_cols`` should be broken by a unique column, exactly as
     with a window.
     """
-    from getl_spark.common.scale import grouped_prefix_scan
-
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     order_cols = (
         [order_cols] if isinstance(order_cols, str) else list(order_cols)
     )
@@ -3002,18 +2905,7 @@ def cusum(
     base = df.where(x.isNotNull() & ~F.isnan(x))
     if target is None:
         means = base.groupBy(*keys).agg(F.avg(x).alias("__target"))
-        if keys:
-            m = means.select(
-                *[F.col(k).alias(f"__cu_{k}") for k in keys], "__target"
-            )
-            cond = F.lit(True)
-            for k in keys:
-                cond = cond & F.col(k).eqNullSafe(F.col(f"__cu_{k}"))
-            base = base.join(F.broadcast(m), cond).drop(
-                *[f"__cu_{k}" for k in keys]
-            )
-        else:
-            base = base.join(F.broadcast(means))
+        base = join_on_keys(base, F.broadcast(means), keys)
         tgt = F.col("__target")
     else:
         tgt = F.lit(float(target))
@@ -3125,13 +3017,7 @@ def quantiles(
         raise ValueError(
             f"quantiles: qs must be non-empty probabilities in [0, 1], got {qs}"
         )
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
-    from getl_spark.common.scale import grouped_prefix_sum
-
+    keys = keys_of(group_by)
     x = F.col(column).cast("double")
     base = df.select(*keys, x.alias("__x")).where(
         x.isNotNull() & ~F.isnan(x)
@@ -3145,16 +3031,7 @@ def quantiles(
         counts, keys, ["__x"], "__n", "__cum", prepinned=True
     )
     totals = counts.groupBy(*keys).agg(F.sum("__n").alias("__tot"))
-    if keys:
-        t = totals.select(
-            *[F.col(k).alias(f"__qt_{k}") for k in keys], "__tot"
-        )
-        cond = F.lit(True)
-        for k in keys:
-            cond = cond & F.col(k).eqNullSafe(F.col(f"__qt_{k}"))
-        joined = cum.join(t, cond).drop(*[f"__qt_{k}" for k in keys])
-    else:
-        joined = cum.join(F.broadcast(totals))
+    joined = join_on_keys(cum, totals, keys)
     picks = []
     pred = F.lit(False)
     for i, q in enumerate(qs):
@@ -3218,13 +3095,7 @@ def gini(
     NULL/NaN rows are excluded. ``gini`` is NULL when total = 0 or
     n < 2.
     """
-    from getl_spark.common.scale import grouped_prefix_sum
-
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     x = F.col(value_col).cast("double")
     guard = F.assert_true(
         x >= 0, F.lit("stats.gini: values must be non-negative")
@@ -3298,18 +3169,12 @@ def autocorrelation(
     as in a plain ordered series); ``order_cols`` must be a total
     order within each group.
     """
-    from getl_spark.common.scale import grouped_prefix_sum
-
     lags = [int(l) for l in lags]
     if not lags or any(l < 1 for l in lags):
         raise ValueError(
             f"autocorrelation: lags must be positive integers, got {lags}"
         )
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     order_cols = (
         [order_cols] if isinstance(order_cols, str) else list(order_cols)
     )
@@ -3328,16 +3193,7 @@ def autocorrelation(
     # sum(x²) − n·mean² identity cancels catastrophically on
     # large-mean streams (the same reason moments() rejects it);
     # pos is pinned, so this is one extra scan of a few-key frame
-    if keys:
-        mm = means.select(
-            *[F.col(k).alias(f"__mm_{k}") for k in keys], "__n", "__mean"
-        )
-        mcond0 = F.lit(True)
-        for k in keys:
-            mcond0 = mcond0 & pos[k].eqNullSafe(mm[f"__mm_{k}"])
-        centered = pos.join(F.broadcast(mm), mcond0)
-    else:
-        centered = pos.join(F.broadcast(means))
+    centered = join_on_keys(pos, F.broadcast(means), keys)
     moments = centered.groupBy(*keys).agg(
         F.max("__n").alias("__n"),
         F.max("__mean").alias("__mean"),
@@ -3495,11 +3351,7 @@ def trend(
     six moments are exact integers in doubles (< 2^53), making the
     fit reproducible bit-for-bit across engines and row orders.
     """
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     day = F.datediff(F.to_date(F.col(ts_col)), F.lit("1970-01-01"))
     metric = (
         F.count("*").cast("double")
@@ -3560,11 +3412,7 @@ def cramers_v(
     100 TB: one scan, then all shuffles are ∝ distinct levels, not
     rows.
     """
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     base = df.where(
         F.col(col_a).isNotNull() & F.col(col_b).isNotNull()
     ).select(*keys, F.col(col_a).alias("__a"), F.col(col_b).alias("__b"))
@@ -3631,13 +3479,7 @@ def bh_adjust(
     few-group/million-test scan keeps full parallelism (the
     [[prefix-scan-family]] idiom).
     """
-    from getl_spark.common.scale import grouped_prefix_scan, grouped_prefix_sum
-
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     p = F.col(p_col).cast("double")
     guard = F.assert_true(
         (p >= 0) & (p <= 1),
@@ -3895,11 +3737,7 @@ def anova(
     Returns one row per segment: ``(group_by..., n, k, ss_between,
     ss_within, f_stat, df1, df2, eta_sq, p_value)``.
     """
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     v = F.col(value_col).cast("double")
     base = df.where(v.isNotNull() & ~F.isnan(v)).select(
         *keys, F.col(group_col).alias("__arm"), v.alias("__x")
@@ -3915,17 +3753,7 @@ def anova(
             "__grand"
         ),
     )
-    if keys:
-        t = totals.select(
-            *[F.col(c).alias(f"__av_{c}") for c in keys], "__tot", "__grand"
-        )
-        cond = F.lit(True)
-        for c in keys:
-            cond = cond & F.col(c).eqNullSafe(F.col(f"__av_{c}"))
-        joined = arms.join(t, cond).drop(*[f"__av_{c}" for c in keys])
-    else:
-        # 1-row totals broadcast (whitelisted BNLJ shape)
-        joined = arms.join(F.broadcast(totals))
+    joined = join_on_keys(arms, totals, keys)
     agg = joined.groupBy(*keys).agg(
         F.max("__tot").alias("n"),
         F.count("*").cast("bigint").alias("k"),
@@ -4021,11 +3849,7 @@ def welch_anova(
     per-arm pass (k-row reduce), a 1-row weighted-mean broadcast (or
     keyed join under ``group_by``), closed-form arithmetic after.
     """
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     v = F.col(value_col).cast("double")
     base = df.where(v.isNotNull() & ~F.isnan(v)).select(
         *keys, F.col(group_col).alias("__arm"), v.alias("__x")
@@ -4044,17 +3868,7 @@ def welch_anova(
         F.sum("__w").alias("__wsum"),
         (F.sum(F.col("__w") * F.col("__mean")) / F.sum("__w")).alias("__mw"),
     )
-    if keys:
-        t = totals.select(
-            *[F.col(c).alias(f"__wv_{c}") for c in keys], "__wsum", "__mw"
-        )
-        cond = F.lit(True)
-        for c in keys:
-            cond = cond & F.col(c).eqNullSafe(F.col(f"__wv_{c}"))
-        joined = arms.join(t, cond).drop(*[f"__wv_{c}" for c in keys])
-    else:
-        # 1-row weighted-totals broadcast (whitelisted BNLJ shape)
-        joined = arms.join(F.broadcast(totals))
+    joined = join_on_keys(arms, totals, keys)
     agg = joined.groupBy(*keys).agg(
         F.sum("__n").cast("bigint").alias("n"),
         F.count("*").cast("bigint").alias("k"),
@@ -4147,13 +3961,7 @@ def kaplan_meier(
     Fully SQL-expressible (exact DuckDB oracle: same log-sum window
     arithmetic).
     """
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
-    from getl_spark.common.scale import grouped_prefix_sum
-
+    keys = keys_of(group_by)
     t = F.col(duration_col).cast("double")
     e = F.col(event_col).cast("boolean")
     base = df.where(t.isNotNull() & ~F.isnan(t) & e.isNotNull()).select(
@@ -4176,17 +3984,7 @@ def kaplan_meier(
         counts, keys, ["__t"], "__w", "__cum", prepinned=True
     )
     totals = counts.groupBy(*keys).agg(F.sum("__w").alias("__tot"))
-    if keys:
-        tt = totals.select(
-            *[F.col(k).alias(f"__km_{k}") for k in keys], "__tot"
-        )
-        cond = F.lit(True)
-        for k in keys:
-            cond = cond & F.col(k).eqNullSafe(F.col(f"__km_{k}"))
-        joined = cum.join(tt, cond).drop(*[f"__km_{k}" for k in keys])
-    else:
-        # 1-row totals broadcast (whitelisted BNLJ shape)
-        joined = cum.join(F.broadcast(totals))
+    joined = join_on_keys(cum, totals, keys)
     risk = joined.withColumn(
         "__n_risk", F.col("__tot") - F.col("__cum") + F.col("__w")
     )
@@ -4262,8 +4060,6 @@ def log_rank(
     Returns one row: ``(n_control, n_treatment, observed_treatment,
     expected_treatment, chi2, p_value)``.
     """
-    from getl_spark.common.scale import grouped_prefix_sum
-
     t = F.col(duration_col).cast("double")
     e = F.col(event_col).cast("boolean")
     g = F.col(group_col).cast("string")
@@ -4389,11 +4185,7 @@ def benford(
     keyed when grouped); everything after is arithmetic on the
     group-count-sized result.
     """
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     v = F.col(value_col).cast("double")
     x = F.abs(v)
     digit = F.substring(F.format_string("%.15e", x), 1, 1)
@@ -4604,11 +4396,7 @@ def seasonality(
         cell = F.pmod(days + 3, F.lit(7)) + 1
     else:
         raise ValueError(f"period must be 'hour' or 'dow', got {period!r}")
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     cells = (
         df.where(F.col(ts_col).isNotNull())
         .select(*keys, cell.cast("int").alias("__cell"))
@@ -4691,11 +4479,7 @@ def levene(
     join; then ``anova``'s partial-aggregated k-row decomposition.
     No per-arm buffering anywhere.
     """
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     v = F.col(value_col).cast("double")
     base = df.where(v.isNotNull() & ~F.isnan(v)).select(
         *keys, F.col(group_col).alias("__arm"), v.alias("__x")
@@ -4713,14 +4497,8 @@ def levene(
         raise ValueError(
             f"levene: center must be 'median' or 'mean', got {center!r}"
         )
-    c = med.select(
-        *[F.col(k).alias(f"__lv_{k}") for k in arm_keys], "__ctr"
-    )
-    cond = F.lit(True)
-    for k in arm_keys:
-        cond = cond & F.col(k).eqNullSafe(F.col(f"__lv_{k}"))
     z = (
-        base.join(c, cond)
+        join_on_keys(base, med, arm_keys)
         .select(
             *keys,
             "__arm",
@@ -4764,11 +4542,7 @@ def cronbach_alpha(
     broadcast. Rows are scanned twice (two different keyings), never
     buffered per group.
     """
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     v = F.col(value_col).cast("double")
     base = df.where(v.isNotNull() & ~F.isnan(v)).select(
         *keys,
@@ -4800,24 +4574,9 @@ def cronbach_alpha(
         .groupBy(*keys)
         .agg(F.sum("__var_r").alias("__sum_var"))
     )
-    if keys:
-        def _pfx(d, tag):
-            return d.select(
-                *[F.col(c).alias(f"__{tag}_{c}") for c in keys],
-                *[c for c in d.columns if c not in keys],
-            )
-
-        j = kcount
-        for other, tag in ((item_stats, "is"), (rater_stats, "rs")):
-            o = _pfx(other, tag)
-            cond = F.lit(True)
-            for c in keys:
-                cond = cond & F.col(c).eqNullSafe(F.col(f"__{tag}_{c}"))
-            j = j.join(o, cond).drop(*[f"__{tag}_{c}" for c in keys])
-    else:
-        j = kcount.join(F.broadcast(item_stats)).join(
-            F.broadcast(rater_stats)
-        )
+    j = join_on_keys(
+        join_on_keys(kcount, item_stats, keys), rater_stats, keys
+    )
     complete = (
         (F.col("__max_cnt") == F.col("__k"))
         & (F.col("__min_cnt") == F.col("__k"))
@@ -4886,13 +4645,7 @@ def kendall_w(
     fusion joins tables with one row per group. No per-rater
     buffering, no global sort, no window over raw rows.
     """
-    from getl_spark.common.scale import grouped_prefix_sum
-
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     v = F.col(value_col).cast("double")
     base = df.where(v.isNotNull() & ~F.isnan(v)).select(
         *keys,
@@ -4924,17 +4677,7 @@ def kendall_w(
             F.col("__c") * F.col("__c") * F.col("__c") - F.col("__c")
         ).alias("__t")
     )
-    cum = grouped_prefix_sum(counts, [*keys, "__rt"], ["__v"], "__c", "__cum")
-    ranks = cum.select(
-        *keys,
-        "__rt",
-        "__v",
-        (
-            (F.col("__cum") - F.col("__c")).cast("double")
-            + (F.col("__c") + 1) / F.lit(2.0)
-        ).alias("__rank"),
-    )
-    rk = ranks.select(
+    rk = value_ranks(counts, [*keys, "__rt"], "__v", "__c").select(
         *[F.col(c).alias(f"__rk_{c}") for c in [*keys, "__rt", "__v"]],
         "__rank",
     )
@@ -4947,52 +4690,21 @@ def kendall_w(
     rsums = ranked.groupBy(*keys, "__it").agg(
         F.sum("__rank").alias("__ri")
     )
-    if keys:
-        def _pfx(d, tag):
-            return d.select(
-                *[F.col(c).alias(f"__{tag}_{c}") for c in keys],
-                *[c for c in d.columns if c not in keys],
+    rs = join_on_keys(rsums, kcount, keys)
+    s_tab = rs.groupBy(*keys).agg(
+        F.sum(
+            (
+                F.col("__ri")
+                - F.col("__k").cast("double")
+                * (F.col("__n").cast("double") + 1)
+                / F.lit(2.0)
             )
-
-        def _fuse(left, other, tag):
-            o = _pfx(other, tag)
-            c = F.lit(True)
-            for k in keys:
-                c = c & left[k].eqNullSafe(o[f"__{tag}_{k}"])
-            return left.join(o, c).drop(*[f"__{tag}_{k}" for k in keys])
-
-        rs = _fuse(rsums, kcount, "kc")
-        s_tab = rs.groupBy(*keys).agg(
-            F.sum(
-                (
-                    F.col("__ri")
-                    - F.col("__k").cast("double")
-                    * (F.col("__n").cast("double") + 1)
-                    / F.lit(2.0)
-                )
-                ** 2
-            ).alias("__s")
-        )
-        j = _fuse(_fuse(_fuse(kcount, s_tab, "s"), ties, "t"),
-                  item_guard, "ig")
-    else:
-        rs = rsums.join(F.broadcast(kcount))
-        s_tab = rs.agg(
-            F.sum(
-                (
-                    F.col("__ri")
-                    - F.col("__k").cast("double")
-                    * (F.col("__n").cast("double") + 1)
-                    / F.lit(2.0)
-                )
-                ** 2
-            ).alias("__s")
-        )
-        j = (
-            kcount.join(F.broadcast(s_tab))
-            .join(F.broadcast(ties))
-            .join(F.broadcast(item_guard))
-        )
+            ** 2
+        ).alias("__s")
+    )
+    j = kcount
+    for other in (s_tab, ties, item_guard):
+        j = join_on_keys(j, other, keys)
     complete = (
         (F.col("__max_cnt") == F.col("__k"))
         & (F.col("__min_cnt") == F.col("__k"))
@@ -5078,11 +4790,7 @@ def krippendorff_alpha(
             f"'interval' (map ordinal data to midranks upstream), "
             f"got {metric!r}"
         )
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     if metric == "interval":
         v = F.col(value_col).cast("double")
         base = df.where(v.isNotNull() & ~F.isnan(v)).select(
@@ -5106,19 +4814,6 @@ def krippendorff_alpha(
     kept = base.join(uc_r, cond).drop(
         *[f"__uk_{c}" for c in [*keys, "__u"]]
     )
-
-    def _fuse(left, other, tag):
-        if not keys:
-            return left.join(F.broadcast(other))
-        o = other.select(
-            *[F.col(c).alias(f"__{tag}_{c}") for c in keys],
-            *[c for c in other.columns if c not in keys],
-        )
-        c = F.lit(True)
-        for k in keys:
-            c = c & left[k].eqNullSafe(o[f"__{tag}_{k}"])
-        return left.join(o, c).drop(*[f"__{tag}_{k}" for k in keys])
-
     if metric == "nominal":
         uc = kept.groupBy(*keys, "__u", "__v").agg(
             F.count("*").cast("bigint").alias("__c")
@@ -5150,7 +4845,7 @@ def krippendorff_alpha(
                 ).alias("__snc2")
             )
         )
-        j = _fuse(gstats, marg, "mg")
+        j = join_on_keys(gstats, marg, keys)
         n = F.col("__n").cast("double")
         d_e = (n * n - F.col("__snc2").cast("double")) / (n * (n - 1))
         d_o = F.col("__dosum") / n
@@ -5158,7 +4853,7 @@ def krippendorff_alpha(
         gmean = kept.groupBy(*keys).agg(
             F.round(F.avg("__v"), 6).alias("__gm")
         )
-        centered = _fuse(kept, gmean, "gm").select(
+        centered = join_on_keys(kept, gmean, keys).select(
             *keys, "__u", (F.col("__v") - F.col("__gm")).alias("__cv")
         )
         unit = centered.groupBy(*keys, "__u").agg(
@@ -5231,11 +4926,7 @@ def theil_sen(
         raise ValueError(
             f"theil_sen: max_points must be >= 2, got {max_points}"
         )
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     x = F.col(x_col).cast("double")
     y = F.col(y_col).cast("double")
     base = df.where(
@@ -5276,18 +4967,11 @@ def theil_sen(
     )
     slope_med = _grouped_exact_median(pairs, keys, "__slope")
     sm = slope_med.select(
-        *[F.col(k).alias(f"__sm_{k}") for k in keys],
+        *keys,
         F.col("__med_n").alias("__n_pairs"),
         F.col("__median").alias("__slope"),
     )
-    if keys:
-        jc = F.lit(True)
-        for k in keys:
-            jc = jc & base[k].eqNullSafe(sm[f"__sm_{k}"])
-        resid = base.join(sm, jc).drop(*[f"__sm_{k}" for k in keys])
-    else:
-        resid = base.join(F.broadcast(sm))
-    resid = resid.select(
+    resid = join_on_keys(base, sm, keys).select(
         *keys,
         "__n_pairs",
         "__slope",
@@ -5363,18 +5047,12 @@ def gains_table(
         raise ValueError(
             f"gains_table: n_buckets must be >= 2, got {n_buckets}"
         )
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     s = F.col(score_col).cast("double")
     y = F.col(label_col).cast("bigint")
-    guard = F.assert_true(
-        y.isin(0, 1),
-        F.lit("stats.gains_table: label column must be binary 0/1"),
+    checked = binary_label(
+        y, "stats.gains_table: label column must be binary 0/1"
     )
-    checked = y + F.coalesce(guard.cast("bigint"), F.lit(0))
     # pinned: feeds the prefix scan (sampled in an extra pass) and
     # the totals aggregate — r13
     counts = pin(
@@ -5385,8 +5063,6 @@ def gains_table(
             F.sum(checked).cast("bigint").alias("__np"),
         )
     )
-    from getl_spark.common.scale import grouped_prefix_sum
-
     cum = grouped_prefix_sum(
         counts, keys, ["__negs"], ["__n", "__np"], ["__cn", "__cp"],
         prepinned=True,
@@ -5395,16 +5071,7 @@ def gains_table(
         F.sum("__n").cast("bigint").alias("__tn"),
         F.sum("__np").cast("bigint").alias("__tp"),
     )
-    if keys:
-        t = totals.select(
-            *[F.col(c).alias(f"__t_{c}") for c in keys], "__tn", "__tp"
-        )
-        cond = F.lit(True)
-        for k in keys:
-            cond = cond & cum[k].eqNullSafe(t[f"__t_{k}"])
-        j = cum.join(t, cond).drop(*[f"__t_{k}" for k in keys])
-    else:
-        j = cum.join(F.broadcast(totals))
+    j = join_on_keys(cum, totals, keys)
     # a tied block belongs to the bucket where it BEGINS
     bucket = F.floor(
         (F.col("__cn") - F.col("__n")).cast("double")
@@ -5624,8 +5291,6 @@ def _categorical_drift(
     """
     from pyspark.sql import Window
 
-    from getl_spark.common.scale import pin
-
     def melt_cat(df_):
         kv = F.array(
             *[
@@ -5825,6 +5490,37 @@ def ab_report(
     )
 
 
+def _arm_value_ranks(df: DataFrame, group_col: str, value_col: str):
+    """Shared reduction of ``kruskal_wallis`` and ``dunn_test``.
+    Returns ``(ranked, ties)``: ``ranked`` is the (arm ``__g``, value
+    ``__v``) count table ``__c`` joined to each value's GLOBAL midrank
+    ``__rank``; ``ties`` is the 1-row ``(__t = Σ(t³−t), __N)``. The
+    input is scanned ONCE: the (arm × distinct-value)-bounded count
+    table is pinned and the per-value counts and tie stats derive from
+    it."""
+    v = F.col(value_col).cast("double")
+    base = df.where(
+        v.isNotNull() & ~F.isnan(v) & F.col(group_col).isNotNull()
+    ).select(F.col(group_col).alias("__g"), v.alias("__v"))
+    gv = pin(
+        base.groupBy("__g", "__v").agg(
+            F.count("*").cast("bigint").alias("__c")
+        )
+    )
+    # per-value counts across ALL arms -> global midranks
+    vc = gv.groupBy("__v").agg(F.sum("__c").cast("bigint").alias("__n"))
+    ties = vc.agg(
+        F.sum(
+            F.col("__n").cast("double") ** 3 - F.col("__n").cast("double")
+        ).alias("__t"),
+        F.sum("__n").cast("bigint").alias("__N"),
+    )
+    rk = value_ranks(vc, [], "__v", "__n").select(
+        F.col("__v").alias("__rv"), "__rank"
+    )
+    return gv.join(rk, gv["__v"] == rk["__rv"]), ties
+
+
 def kruskal_wallis(
     df: DataFrame,
     group_col: str,
@@ -5854,43 +5550,10 @@ def kruskal_wallis(
     and the per-value counts / tie stats derive from it (r13: the
     previous vc/ties/gv fan-out re-evaluated the source per branch).
     """
-    from getl_spark.common.scale import grouped_prefix_sum
-
-    v = F.col(value_col).cast("double")
-    base = df.where(
-        v.isNotNull() & ~F.isnan(v) & F.col(group_col).isNotNull()
-    ).select(F.col(group_col).alias("__g"), v.alias("__v"))
-    # ONE pass over the input; every downstream frame reads this
-    # pinned (arm × distinct-value)-bounded table
-    gv = pin(
-        base.groupBy("__g", "__v").agg(
-            F.count("*").cast("bigint").alias("__c")
-        )
-    )
-    # per-value counts across ALL arms -> global midranks
-    vc = gv.groupBy("__v").agg(F.sum("__c").cast("bigint").alias("__n"))
-    cum = grouped_prefix_sum(vc, [], ["__v"], "__n", "__cum")
-    ranks = cum.select(
-        "__v",
-        (
-            (F.col("__cum") - F.col("__n")).cast("double")
-            + (F.col("__n") + 1) / F.lit(2.0)
-        ).alias("__rank"),
-    )
-    ties = vc.agg(
-        F.sum(
-            F.col("__n").cast("double") ** 3 - F.col("__n").cast("double")
-        ).alias("__t"),
-        F.sum("__n").cast("bigint").alias("__N"),
-    )
-    rk = ranks.select(F.col("__v").alias("__rv"), "__rank")
-    arm = (
-        gv.join(rk, gv["__v"] == rk["__rv"])
-        .groupBy("__g")
-        .agg(
-            F.sum("__c").cast("bigint").alias("__ng"),
-            F.sum(F.col("__c") * F.col("__rank")).alias("__rsum"),
-        )
+    ranked, ties = _arm_value_ranks(df, group_col, value_col)
+    arm = ranked.groupBy("__g").agg(
+        F.sum("__c").cast("bigint").alias("__ng"),
+        F.sum(F.col("__c") * F.col("__rank")).alias("__rsum"),
     )
     fused = arm.join(F.broadcast(ties))
     n = F.col("__N").cast("double")
@@ -5955,40 +5618,10 @@ def dunn_test(
     5-6 scans + a double-evaluated BH join, 10.2 s → the pin plus
     the bounded BH removed all of it).
     """
-    from getl_spark.common.scale import grouped_prefix_sum
-
-    v = F.col(value_col).cast("double")
-    base = df.where(
-        v.isNotNull() & ~F.isnan(v) & F.col(group_col).isNotNull()
-    ).select(F.col(group_col).alias("__g"), v.alias("__v"))
-    # ONE pass over the input; everything else reads this pinned
-    # (arm × distinct-value)-bounded table
-    gv = pin(
-        base.groupBy("__g", "__v").agg(
-            F.count("*").cast("bigint").alias("__c")
-        )
-    )
-    vc = gv.groupBy("__v").agg(F.sum("__c").cast("bigint").alias("__n"))
-    cum = grouped_prefix_sum(vc, [], ["__v"], "__n", "__cum")
-    ranks = cum.select(
-        "__v",
-        (
-            (F.col("__cum") - F.col("__n")).cast("double")
-            + (F.col("__n") + 1) / F.lit(2.0)
-        ).alias("__rank"),
-    )
-    ties = vc.agg(
-        F.sum(
-            F.col("__n").cast("double") ** 3 - F.col("__n").cast("double")
-        ).alias("__t"),
-        F.sum("__n").cast("bigint").alias("__N"),
-    )
-    rk = ranks.select(F.col("__v").alias("__rv"), "__rank")
+    ranked, ties = _arm_value_ranks(df, group_col, value_col)
     # pinned k-row table: the a/b pair self-join below branches it
     arm = pin(
-        gv.join(rk, gv["__v"] == rk["__rv"])
-        .groupBy("__g")
-        .agg(
+        ranked.groupBy("__g").agg(
             F.sum("__c").cast("bigint").alias("__ng"),
             (F.sum(F.col("__c") * F.col("__rank")) / F.sum("__c")).alias(
                 "__mr"
@@ -6079,17 +5712,11 @@ def cochran_q(
     per-group 1-row stats and joined (broadcast when ungrouped); no
     windows, no pivot, no k×k anything.
     """
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     y = F.col(outcome_col).cast("bigint")
-    guard_bin = F.assert_true(
-        y.isin(0, 1),
-        F.lit("stats.cochran_q: outcome column must be binary 0/1"),
+    checked = binary_label(
+        y, "stats.cochran_q: outcome column must be binary 0/1"
     )
-    checked = y + F.coalesce(guard_bin.cast("bigint"), F.lit(0))
     base = df.where(
         F.col(item_col).isNotNull()
         & F.col(model_col).isNotNull()
@@ -6123,16 +5750,7 @@ def cochran_q(
             F.count("*").cast("bigint").alias("__k"),
         )
     )
-    if keys:
-        m = mstats.select(
-            *[F.col(c).alias(f"__m_{c}") for c in keys], "__C2", "__k"
-        )
-        cond = F.lit(True)
-        for c in keys:
-            cond = cond & istats[c].eqNullSafe(m[f"__m_{c}"])
-        j = istats.join(m, cond).drop(*[f"__m_{c}" for c in keys])
-    else:
-        j = istats.join(F.broadcast(mstats))
+    j = join_on_keys(istats, mstats, keys)
     kk = F.col("__k").cast("double")
     complete = (
         (F.col("__min_cnt") == F.col("__k"))
@@ -6203,11 +5821,9 @@ def mcnemar_pairs(
     bounded pair table (:func:`_bh_adjust_bounded`).
     """
     y = F.col(outcome_col).cast("bigint")
-    guard_bin = F.assert_true(
-        y.isin(0, 1),
-        F.lit("stats.mcnemar_pairs: outcome column must be binary 0/1"),
+    checked = binary_label(
+        y, "stats.mcnemar_pairs: outcome column must be binary 0/1"
     )
-    checked = y + F.coalesce(guard_bin.cast("bigint"), F.lit(0))
     base = df.where(
         F.col(item_col).isNotNull()
         & F.col(model_col).isNotNull()
@@ -6430,11 +6046,9 @@ def odds_ratio(
     """
     g = F.col(group_col)
     y = F.col(outcome_col).cast("bigint")
-    guard = F.assert_true(
-        y.isin(0, 1),
-        F.lit("stats.odds_ratio: outcome column must be binary 0/1"),
+    checked = binary_label(
+        y, "stats.odds_ratio: outcome column must be binary 0/1"
     )
-    checked = y + F.coalesce(guard.cast("bigint"), F.lit(0))
     base = df.where(g.isin(control, treatment) & y.isNotNull())
     # cells coalesce to 0 so an empty arm shows REAL counts (sum over
     # zero rows is NULL) and the empty-arm guard below can fire
@@ -6547,11 +6161,9 @@ def fisher_exact(
     """
     g = F.col(group_col)
     y = F.col(outcome_col).cast("bigint")
-    guard = F.assert_true(
-        y.isin(0, 1),
-        F.lit("stats.fisher_exact: outcome column must be binary 0/1"),
+    checked = binary_label(
+        y, "stats.fisher_exact: outcome column must be binary 0/1"
     )
-    checked = y + F.coalesce(guard.cast("bigint"), F.lit(0))
     base = df.where(g.isin(control, treatment) & y.isNotNull())
     agg = base.agg(
         F.coalesce(F.sum(F.when(g == treatment, checked)), F.lit(0))
@@ -6707,11 +6319,7 @@ def meta_analysis(
     (Σw, Σwx, Σwx², Σw²), no window, no driver math. Fully
     SQL-expressible.
     """
-    gb = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    gb = keys_of(group_by)
     x = F.col(effect_col).cast("double")
     se = F.col(se_col).cast("double")
     base = df.where(x.isNotNull() & se.isNotNull() & (se > 0))
@@ -6759,39 +6367,14 @@ def meta_analysis(
     )
     # random-effects pass re-weights the ORIGINAL segment rows with
     # tau2 — one more keyed partial agg joined back (broadcast when
-    # groups are dimension-sized). Both joins are NULL-SAFE on the
-    # group keys: groupBy keeps a NULL group, and a plain equi-join
-    # (NULL != NULL) would silently drop its pooled row from the
-    # output — renamed key columns + eqNullSafe keep it.
-    def _nullsafe_join(left, right, right_keys):
-        cond = None
-        for c, rc in zip(gb, right_keys):
-            leg = left[c].eqNullSafe(right[rc])
-            cond = leg if cond is None else (cond & leg)
-        return left.join(right, cond).drop(*right_keys)
-
-    tau_keys = [f"__mg_{i}" for i in range(len(gb))]
-    tau_tbl = out.select(
-        *[F.col(c).alias(k) for c, k in zip(gb, tau_keys)], "__tau2"
-    )
-    joined = (
-        _nullsafe_join(base, F.broadcast(tau_tbl), tau_keys) if gb
-        else base.crossJoin(F.broadcast(tau_tbl))
-    )
+    # groups are dimension-sized)
+    joined = join_on_keys(base, F.broadcast(out.select(*gb, "__tau2")), gb)
     wr = F.lit(1.0) / (se * se + F.col("__tau2"))
     rand = joined.groupBy(*gb).agg(
         F.sum(wr).alias("__rw"),
         F.sum(wr * x).alias("__rwx"),
     )
-    if gb:
-        rand_keys = [f"__mr_{i}" for i in range(len(gb))]
-        rand = rand.select(
-            *[F.col(c).alias(k) for c, k in zip(gb, rand_keys)],
-            "__rw", "__rwx",
-        )
-        full = _nullsafe_join(out, rand, rand_keys)
-    else:
-        full = out.crossJoin(F.broadcast(rand))
+    full = join_on_keys(out, rand, gb)
     r_eff = F.col("__rwx") / F.col("__rw")
     r_se = F.lit(1.0) / F.sqrt(F.col("__rw"))
     fz = F.col("__fx") / F.col("__fse")
@@ -6859,11 +6442,7 @@ def qini(
     g = F.col(group_col)
     s = F.col(score_col).cast("double")
     y = F.col(outcome_col).cast("bigint")
-    guard = F.assert_true(
-        y.isin(0, 1),
-        F.lit("stats.qini: outcome column must be binary 0/1"),
-    )
-    checked = y + F.coalesce(guard.cast("bigint"), F.lit(0))
+    checked = binary_label(y, "stats.qini: outcome column must be binary 0/1")
     base = df.where(
         g.isin(control, treatment)
         & s.isNotNull() & ~F.isnan(s)
@@ -6881,8 +6460,6 @@ def qini(
             F.sum((1 - is_t) * checked).cast("bigint").alias("__pc"),
         )
     )
-    from getl_spark.common.scale import grouped_prefix_sum
-
     cum = grouped_prefix_sum(
         counts, [], ["__negs"],
         ["__n", "__nt", "__nc", "__pt", "__pc"],
@@ -6993,11 +6570,9 @@ def eb_rates(
         raise ValueError(f"stats.eb_rates: min_n must be >= 1, got {min_n}")
     gb = [group_by] if isinstance(group_by, str) else list(group_by)
     y = F.col(outcome_col).cast("double")
-    guard_bin = F.assert_true(
-        y.isin(0.0, 1.0),
-        F.lit("stats.eb_rates: outcome column must be binary 0/1"),
+    checked = binary_label(
+        y, "stats.eb_rates: outcome column must be binary 0/1"
     )
-    checked = y + F.coalesce(guard_bin.cast("double"), F.lit(0.0))
     per = df.where(y.isNotNull()).groupBy(*gb).agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum(checked).cast("bigint").alias("successes"),
@@ -7127,19 +6702,13 @@ def sample_size(
             "stats.sample_size: mde_rel must be non-zero — a zero "
             "effect needs infinite n by definition"
         )
-    gb = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    gb = keys_of(group_by)
     z_a = _norm_ppf(1 - alpha / 2)
     z_b = _norm_ppf(power)
     y = F.col(outcome_col).cast("double")
-    guard_bin = F.assert_true(
-        y.isin(0.0, 1.0),
-        F.lit("stats.sample_size: outcome column must be binary 0/1"),
+    checked = binary_label(
+        y, "stats.sample_size: outcome column must be binary 0/1"
     )
-    checked = y + F.coalesce(guard_bin.cast("double"), F.lit(0.0))
     agg = df.where(y.isNotNull()).groupBy(*gb).agg(
         F.count("*").cast("bigint").alias("n_rows"),
         F.avg(checked).alias("__p1"),
@@ -7259,11 +6828,9 @@ def bayes_ab(
         )
     g = F.col(group_col)
     y = F.col(outcome_col).cast("bigint")
-    guard = F.assert_true(
-        y.isin(0, 1),
-        F.lit("stats.bayes_ab: outcome column must be binary 0/1"),
+    checked = binary_label(
+        y, "stats.bayes_ab: outcome column must be binary 0/1"
     )
-    checked = y + F.coalesce(guard.cast("bigint"), F.lit(0))
     base = df.where(g.isin(control, treatment) & y.isNotNull())
     agg = base.agg(
         F.coalesce(F.sum(F.when(g == treatment, checked)), F.lit(0))
@@ -7438,11 +7005,7 @@ def mann_kendall(
         raise ValueError(
             f"mann_kendall: max_points must be >= 2, got {max_points}"
         )
-    keys = (
-        []
-        if group_by is None
-        else [group_by] if isinstance(group_by, str) else list(group_by)
-    )
+    keys = keys_of(group_by)
     x = F.col(x_col).cast("double")
     y = F.col(y_col).cast("double")
     base = df.where(
@@ -7588,11 +7151,9 @@ def cochran_armitage(
     """
     x = F.col(score_col).cast("double")
     y = F.col(outcome_col).cast("bigint")
-    guard = F.assert_true(
-        y.isin(0, 1),
-        F.lit("stats.cochran_armitage: outcome column must be binary 0/1"),
+    checked = binary_label(
+        y, "stats.cochran_armitage: outcome column must be binary 0/1"
     )
-    checked = y + F.coalesce(guard.cast("bigint"), F.lit(0))
     base = df.where(x.isNotNull() & ~F.isnan(x) & y.isNotNull())
     levels = base.groupBy(x.alias("__x")).agg(
         F.count("*").cast("double").alias("__n"),
@@ -7687,10 +7248,6 @@ def ipw_balance(
         raise ValueError(f"ipw_balance: trim must be in [0, 0.5), got {trim}")
     t = F.col(treatment_col).cast("bigint")
     p_raw = F.col(propensity_col).cast("double")
-    t_guard = F.assert_true(
-        t.isin(0, 1),
-        F.lit("stats.ipw_balance: treatment column must be binary 0/1"),
-    )
     p_guard = F.assert_true(
         (p_raw > 0) & (p_raw < 1),
         F.lit(
@@ -7703,9 +7260,9 @@ def ipw_balance(
     p = F.least(
         F.greatest(p_raw, F.lit(float(trim))), F.lit(1.0 - float(trim))
     )
-    checked_t = t + F.coalesce(t_guard.cast("bigint"), F.lit(0)) + F.coalesce(
-        p_guard.cast("bigint"), F.lit(0)
-    )
+    checked_t = binary_label(
+        t, "stats.ipw_balance: treatment column must be binary 0/1"
+    ) + F.coalesce(p_guard.cast("bigint"), F.lit(0))
     base = df.where(t.isNotNull() & p_raw.isNotNull() & ~F.isnan(p_raw))
     melt = base.select(
         checked_t.alias("__t"),
@@ -7940,10 +7497,6 @@ def psm_match(
         )
     t = F.col(treatment_col).cast("bigint")
     p_raw = F.col(propensity_col).cast("double")
-    t_guard = F.assert_true(
-        t.isin(0, 1),
-        F.lit("stats.psm_match: treatment column must be binary 0/1"),
-    )
     p_guard = F.assert_true(
         (p_raw > 0) & (p_raw < 1),
         F.lit(
@@ -7956,7 +7509,9 @@ def psm_match(
     # every row — a t=2 row belongs to neither arm, so a guard attached
     # only to __p would be pruned away with the row); the propensity
     # guard rides on __p, which every surviving row materializes
-    t_checked = t + F.coalesce(t_guard.cast("bigint"), F.lit(0))
+    t_checked = binary_label(
+        t, "stats.psm_match: treatment column must be binary 0/1"
+    )
     p = p_raw + F.coalesce(p_guard.cast("double"), F.lit(0.0))
     base = df.where(
         t.isNotNull() & p_raw.isNotNull() & F.col(id_col).isNotNull()

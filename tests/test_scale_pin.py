@@ -89,25 +89,53 @@ def test_pin_cluster_without_dir_uses_replicated_localcheckpoint(
     assert isinstance(spark.sparkContext, SparkContext)
 
 
-def test_unpin_is_safe_on_every_rung(spark, monkeypatch):
-    """unpin() is the explicit release point for superseded loop pins:
-    a no-op on the localCheckpoint rungs (ContextCleaner frees blocks
-    on dereference), never an error on never-pinned frames, and the
-    frame stays readable after release (blocks exist until
-    dereference)."""
-    from getl_spark.common.scale import unpin
+def test_stats_helpers_keys_ranks_and_key_joins(spark):
+    """The shared stats helpers: ``keys_of`` accepts every group_by
+    form; ``value_ranks`` midranks equal pandas' average ranks per
+    group, with ties and a NULL group key; ``join_on_keys`` keeps the
+    NULL-key group (a name-list join would drop it) and broadcasts the
+    1-row table when there are no keys."""
+    import pandas as pd
+    from pyspark.sql import functions as F
 
-    lc = pin(spark.range(4))
-    unpin(lc)
-    assert lc.count() == 4
-    unpin(lc)  # double release: no-op
-    unpin(spark.range(3))  # never pinned: no-op
+    from getl_spark.common.scale import join_on_keys, keys_of, value_ranks
 
-    # cluster rung (replicated localCheckpoint): same contract
-    monkeypatch.setattr(spark.sparkContext, "master", "yarn", raising=False)
-    out = pin(spark.range(9))
-    unpin(out)
-    assert out.count() == 9
+    assert keys_of(None) == []
+    assert keys_of("g") == ["g"]
+    assert keys_of(["g", "h"]) == ["g", "h"]
+    assert keys_of(("g", "h")) == ["g", "h"]
+
+    rows = [
+        ("a", 1.0), ("a", 2.0), ("a", 2.0), ("a", 5.0),
+        (None, 3.0), (None, 3.0), (None, 3.0), (None, 1.0),
+        ("b", 7.0),
+    ]
+    df = spark.createDataFrame(rows, "g string, v double")
+    counts = df.groupBy("g", "v").agg(F.count("*").cast("bigint").alias("n"))
+    got = {
+        (r["g"], r["v"]): r["__rank"]
+        for r in value_ranks(counts, ["g"], "v", "n").collect()
+    }
+    pdf = pd.DataFrame(rows, columns=["g", "v"])
+    pdf["r"] = pdf.groupby("g", dropna=False)["v"].rank(method="average")
+    want = {
+        (None if pd.isna(g) else g, v): r
+        for g, v, r in pdf.drop_duplicates(["g", "v"]).itertuples(index=False)
+    }
+    assert got == want
+
+    per_group = counts.groupBy("g").agg(F.sum("n").alias("tot"))
+    joined = join_on_keys(df, per_group, ["g"])
+    assert joined.columns == ["g", "v", "tot"]
+    assert sorted(
+        (r["g"] or "", r["v"], r["tot"]) for r in joined.collect()
+    ) == sorted((g or "", v, {"a": 4, None: 4, "b": 1}[g]) for g, v in rows)
+
+    total = join_on_keys(df, df.agg(F.count("*").alias("total")), [])
+    assert "BroadcastNestedLoopJoin" in (
+        total._jdf.queryExecution().executedPlan().toString()
+    )
+    assert {r["total"] for r in total.collect()} == {len(rows)}
 
 
 def test_iterative_loops_survive_cluster_rung(spark, monkeypatch):

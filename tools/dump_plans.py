@@ -1,13 +1,49 @@
-"""Regenerate docs/PLANS.md: formatted physical plans for flagship
-queries, as reviewable evidence of pushdown/pruning/join strategy."""
+"""Dump formatted AQE-final physical plans, as reviewable evidence of
+pushdown, pruning and join strategy, and as a before/after check that
+a refactor leaves plans unchanged.
+
+Usage::
+
+    python tools/dump_plans.py [data_dir] [query ...] [--out PATH]
+
+``data_dir`` defaults to ``$SPARK_GRAFT_SF_DIR`` (else sf0.1 test
+data); queries default to the flagship list below and may be
+``fnmatch`` patterns over ``__spark_entry__.all_queries()`` (e.g.
+``'stats_*'``). Ids that change from run to run (expression, plan,
+RDD, codegen and query-stage ids) are stripped, so dumps made from two
+commits diff cleanly. The dump is written to ``--out``
+(default ``docs/PLANS.md``, which is not committed).
+"""
 
 from __future__ import annotations
 
+import argparse
 import contextlib
+import fnmatch
 import io
+import os
+import re
 import sys
 
 sys.path.insert(0, ".")
+
+# run-dependent ids: expression ids, exchange plan ids, checkpoint RDD
+# ids and call sites, codegen stage ids, and AQE query-stage ids (the
+# order in which concurrently submitted stages happen to finish)
+_IDS = [
+    (re.compile(r"#\d+"), ""),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (re.compile(r"RDD\[\d+\] at (\w+) at [^,\s]+"), r"RDD[] at \1"),
+    (re.compile(r"codegen id : \d+"), "codegen id : "),
+    (re.compile(r"(QueryStage\nOutput \[\d+\]: \[[^\n]*\]\nArguments: )\d+"),
+     r"\1"),
+]
+
+
+def strip_ids(plan: str) -> str:
+    for pat, repl in _IDS:
+        plan = pat.sub(repl, plan)
+    return plan
 
 QUERIES = [
     "q1_pricing_summary",
@@ -170,30 +206,51 @@ QUERIES = [
 ]
 
 
-def main() -> None:
+
+def main(argv=None) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument(
+        "data_dir",
+        nargs="?",
+        default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
+    )
+    ap.add_argument("queries", nargs="*", help="names or fnmatch patterns")
+    ap.add_argument("--out", default="docs/PLANS.md")
+    args = ap.parse_args(argv)
+
     import __spark_entry__ as entry_mod
     from getl_spark import get_spark
 
-    spark = get_spark("plan-dump")
     queries = entry_mod.all_queries()
+    names = []
+    for pat in args.queries or QUERIES:
+        hits = sorted(fnmatch.filter(queries, pat))
+        if not hits:
+            print(f"UNKNOWN query {pat!r}: not in all_queries()")
+            return 2
+        names += [n for n in hits if n not in names]
+
+    spark = get_spark("plan-dump")
     out = [
-        "# PLANS — physical plans of flagship queries (sf0.1)\n",
+        f"# PLANS — physical plans ({os.path.basename(args.data_dir)})\n",
         "Generated by `python tools/dump_plans.py`. What to look for:",
         "`PushedFilters` on scans, pruned `ReadSchema`, broadcast joins",
         "for dimension tables, partial aggregation before exchanges,",
         "AQE-final plans.\n",
     ]
-    for name in QUERIES:
-        df = queries[name](spark, "/root/testdata/sf0.1")
+    for name in names:
+        df = queries[name](spark, args.data_dir)
         df.collect()  # let AQE finalize
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
-        out.append(f"\n## {name}\n\n```\n{buf.getvalue().strip()}\n```\n")
-    with open("docs/PLANS.md", "w") as fh:
+        plan = strip_ids(buf.getvalue().strip())
+        out.append(f"\n## {name}\n\n```\n{plan}\n```\n")
+    with open(args.out, "w") as fh:
         fh.write("\n".join(out))
-    print("wrote docs/PLANS.md")
+    print(f"wrote {args.out} ({len(names)} queries)")
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())
