@@ -132,12 +132,11 @@ def _sample_range_bounds(ck, cols, n_buckets):
     quantiles, exactly the job ``RangePartitioner`` does with its
     reservoir — but the boundaries become plan LITERALS here, which is
     what makes the bucket id a deterministic column instead of an
-    opaque physical partition id. (An earlier r14 revision ran K=20
-    separate ``max_by(rs, xxhash64(rs, salt))`` aggregates — 20 full
-    struct hashes per row through 20 ObjectHashAggregate buffers, which
-    cost ~4.5 µs/row and tripled every row-ranked caller; the
-    single-hash sub-bucket form is the same estimator at one hash +
-    one hash-agg update per row.)
+    opaque physical partition id. One hash and one hash-agg update per
+    row: K separate ``max_by(rs, xxhash64(rs, salt))`` aggregates would
+    be the same estimator at K full struct hashes per row through K
+    ObjectHashAggregate buffers (~4.5 µs/row at K=20, tripling every
+    row-ranked caller).
 
     Returns ``(total_rows, boundaries)`` where boundaries is a sorted,
     deduped list of at most ``n_buckets - 1`` tuples.
@@ -234,6 +233,12 @@ def _bucket_expr(bounds, fields, rs):
     return rank(0, len(bounds)).cast("int")
 
 
+# Boundary literals live in the plan, so the prefix scan's slice count
+# is capped independently of shuffle.partitions: a 100k-partition
+# cluster conf must not inline 100k struct literals.
+_MAX_SCAN_BUCKETS = 4096
+
+
 def grouped_prefix_scan(
     df: DataFrame,
     keys,
@@ -282,15 +287,15 @@ def grouped_prefix_scan(
     branches it directly instead of pinning its own copy — callers
     that pin for other consumers anyway should pass it.
 
-    Plan shape (r14): the slice id is computed as a deterministic
+    Plan shape: the slice id is computed as a deterministic
     range-bucket expression from sampled literal boundaries, then the
     frame is shuffled ONCE with ``repartition(B, pid)``. Because that
     exchange's HashPartitioning(pid) satisfies the window's and the
     offsets aggregate's ClusteredDistribution(pid, keys...), neither
-    needs its own exchange — the previous formulation (opaque
-    ``repartitionByRange`` + ``spark_partition_id``) forced a second
-    full-data hash exchange for the window, because the planner cannot
-    know a physical partition id clusters with physical partitions.
+    needs its own exchange — an opaque ``repartitionByRange`` +
+    ``spark_partition_id`` slice id would force a second full-data
+    hash exchange for the window, because the planner cannot know a
+    physical partition id clusters with physical partitions.
     """
     keys = [keys] if isinstance(keys, str) else list(keys)
     order_cols = (
@@ -316,32 +321,21 @@ def grouped_prefix_scan(
     parts = keys + order_cols
     # pin() materializes the INPUT once; the boundary sampler, the
     # bucketed exchange, and the offsets aggregate all read that one
-    # copy (the old formulation evaluated the upstream twice — once
-    # for repartitionByRange's hidden bounds-sampling pass, once for
-    # the shuffle itself). The slice id is a deterministic expression
-    # over sampled boundary LITERALS, so branch consistency no longer
-    # depends on the pin — it is purely a cost saving now. The pin is
-    # LAZY: the sampler's collect below is the action that
-    # materializes the checkpoint, so the machinery schedules one job
-    # for pin+sample instead of two (r14; same fold as HITS' totals).
+    # copy instead of each evaluating the upstream. The slice id is a
+    # deterministic expression over sampled boundary LITERALS, so
+    # branch consistency does not depend on the pin — it is purely a
+    # cost saving. The pin is LAZY: the sampler's collect below is the
+    # action that materializes the checkpoint, so the machinery
+    # schedules one job for pin+sample instead of two (same fold as
+    # HITS' totals).
     ck = df if prepinned else pin(df, eager=False)
     spark = ck.sparkSession
     try:
         n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except Exception:  # pragma: no cover - e.g. non-integer override
         n_buckets = 200
-    # Boundary literals live in the plan, so their count is capped
-    # independently of shuffle.partitions (a 100k-partition cluster
-    # conf must not inline 100k struct literals). Overridable per
-    # session for deployments that want wider scan parallelism.
-    try:
-        max_buckets = int(
-            spark.conf.get("spark.getl.prefixScan.maxBuckets", "4096")
-        )
-    except Exception:  # pragma: no cover
-        max_buckets = 4096
     total, bounds = _sample_range_bounds(
-        ck, parts, min(n_buckets, max_buckets)
+        ck, parts, min(n_buckets, _MAX_SCAN_BUCKETS)
     )
     fields = ck.select(*parts).schema.fields
     rs = F.struct(*[F.col(c) for c in parts])
@@ -530,7 +524,7 @@ def local_df(spark, rows, schema):
     a ``first()`` — then pays the per-partition Python channel setup
     ~32× SERIALLY: measured 5-6 s steady-state for a 1-row
     ``meta.coalesce(1).write`` at local[32] vs 0.4 s through this
-    helper (r13). One slice is the right shape for every local frame
+    helper. One slice is the right shape for every local frame
     this engine builds (they are model/dimension-sized by contract);
     rows beyond ~10k get one extra slice per 10k so a large literal
     list still parallelizes.

@@ -30,6 +30,7 @@ from typing import List, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from getl_spark.common.path import StoragePath
 from getl_spark.common.scale import pin
 
 try:
@@ -62,12 +63,10 @@ class ManagedTable:
     def exists(self) -> bool:
         if self.fmt == "delta":
             return DeltaTable.isDeltaTable(self.spark, self.path)
-        if os.path.isdir(self.path):
-            return any(
-                f.endswith(".parquet") or f == "_SUCCESS"
-                for f in os.listdir(self.path)
-            )
-        return False
+        return any(
+            f.endswith(".parquet") or f == "_SUCCESS"
+            for f in StoragePath(self.path).listdir()
+        )
 
     def read(self) -> Optional[DataFrame]:
         """The table, or None when absent. A declared ``schema`` spares
@@ -134,7 +133,10 @@ class ManagedTable:
         df = self.read()
         for name, expr in assignments.items():
             df = df.withColumn(name, F.when(condition, expr).otherwise(F.col(name)))
-        self._rewrite(df)
+        # at optimize()'s size-derived file count: one output file per
+        # input file would carry every earlier append forward, and a
+        # control table appended once per lift would grow a file per lift
+        self._rewrite(df.coalesce(self._compaction_file_count(df=df)))
 
     def update_matching(
         self, keys: DataFrame, key_col: str, condition, assignments: dict
@@ -168,7 +170,8 @@ class ManagedTable:
         cond = condition & F.col(flag).isNotNull()
         for name, expr in assignments.items():
             marked = marked.withColumn(name, F.when(cond, expr).otherwise(F.col(name)))
-        self._rewrite(marked.drop(flag))
+        marked = marked.drop(flag)  # compacted as in update()
+        self._rewrite(marked.coalesce(self._compaction_file_count(df=marked)))
 
     def scd2_merge(
         self,
@@ -427,7 +430,7 @@ class ManagedTable:
         the old one deleted, so a crash never loses both; a failed
         move-in puts the old table back.
         """
-        if self.path.startswith(("s3://", "s3a://")):
+        if StoragePath(self.path).is_s3:
             raise NotImplementedError(
                 "parquet-fallback rewrite on object storage is unsafe; "
                 "install delta-spark for ACID merges"

@@ -2,20 +2,19 @@
 
 ``json_to_spark_schema`` converts Spark's portable JSON schema format
 (the output of ``StructType.jsonValue()``) into a ``StructType``;
-``copy_keys`` / ``copy_and_cleanup`` / ``delete_files`` are
-storage-maintenance helpers, generalized from S3-only (reference
-``getl/common/s3path.py``) to any local path as well, with boto3 used
-only when an ``s3://`` URI is involved.
+``copy_keys`` / ``copy_and_cleanup`` / ``delete_files`` / ``list_files``
+are storage-maintenance helpers, generalized from S3-only (reference
+``getl/common/s3path.py``) to any local path as well; each is a thin
+call onto ``StoragePath``.
 """
 
 from __future__ import annotations
 
-import glob
-import os
-import shutil
 from typing import List, Tuple
 
 from pyspark.sql.types import StructType
+
+from getl_spark.common.path import StoragePath
 
 
 def json_to_spark_schema(json_schema: dict) -> StructType:
@@ -38,28 +37,10 @@ def json_to_spark_schema(json_schema: dict) -> StructType:
         ) from type_error
 
 
-def _is_s3(path: str) -> bool:
-    return path.startswith(("s3://", "s3a://"))
-
-
-def _split_s3(path: str) -> Tuple[str, str]:
-    no_scheme = path.split("://", 1)[1]
-    bucket, _, key = no_scheme.partition("/")
-    return bucket, key
-
-
 def delete_files(paths: List[str]) -> None:
     """Delete every file in ``paths`` (s3:// or local)."""
     for path in paths:
-        if _is_s3(path):
-            import boto3  # optional dependency, only for real S3 use
-
-            bucket, key = _split_s3(path)
-            boto3.client("s3").delete_object(Bucket=bucket, Key=key)
-        elif os.path.isdir(path):
-            shutil.rmtree(path, ignore_errors=True)
-        elif os.path.exists(path):
-            os.remove(path)
+        StoragePath(path).delete()
 
 
 def copy_keys(transactions: List[Tuple[str, str]]) -> None:
@@ -70,26 +51,7 @@ def copy_keys(transactions: List[Tuple[str, str]]) -> None:
     local→s3 (upload), local→local (copy2).
     """
     for source, target in transactions:
-        src_s3, tgt_s3 = _is_s3(source), _is_s3(target)
-        if src_s3 or tgt_s3:
-            import boto3
-
-            s3 = boto3.client("s3")
-            if src_s3 and tgt_s3:
-                sb, sk = _split_s3(source)
-                tb, tk = _split_s3(target)
-                s3.copy({"Bucket": sb, "Key": sk}, tb, tk)
-            elif src_s3:
-                sb, sk = _split_s3(source)
-                if os.path.dirname(target):
-                    os.makedirs(os.path.dirname(target), exist_ok=True)
-                s3.download_file(sb, sk, target)
-            else:
-                tb, tk = _split_s3(target)
-                s3.upload_file(source, tb, tk)
-        else:
-            os.makedirs(os.path.dirname(target), exist_ok=True)
-            shutil.copy2(source, target)
+        StoragePath(source).copy(StoragePath(target))
 
 
 def copy_and_cleanup(transactions: List[Tuple[str, str]]) -> None:
@@ -100,28 +62,13 @@ def copy_and_cleanup(transactions: List[Tuple[str, str]]) -> None:
 
 
 def list_files(base_path: str, suffix: str = "") -> List[str]:
-    """List files under a prefix, local or s3://, filtered by suffix.
+    """List the files under a directory, local or s3://, filtered by
+    suffix (``StoragePath.glob``: ``_``/``.`` names skipped, scheme kept).
 
     This is the listing layer behind the file registries (reference
-    does S3-only via boto3 paginators, ``getl/common/s3path.py:80-106``).
+    lists S3 only, ``getl/common/s3path.py:80-106``).
     Driver-side metadata operation by design — at 100 TB the listing is
     bounded by file count, and the date-prefix registry narrows it
     before we ever get here.
     """
-    if _is_s3(base_path):
-        import boto3
-
-        bucket, prefix = _split_s3(base_path)
-        paginator = boto3.client("s3").get_paginator("list_objects_v2")
-        out = []
-        for page in paginator.paginate(Bucket=bucket, Prefix=prefix):
-            for obj in page.get("Contents", []):
-                if obj["Key"].endswith(suffix):
-                    out.append(f"s3://{bucket}/{obj['Key']}")
-        return out
-    pattern = os.path.join(base_path, "**")
-    return sorted(
-        p
-        for p in glob.glob(pattern, recursive=True)
-        if os.path.isfile(p) and p.endswith(suffix) and not os.path.basename(p).startswith(("_", "."))
-    )
+    return [str(p) for p in StoragePath(base_path).glob(suffix)]

@@ -28,6 +28,7 @@ from typing import Callable, Dict, List, Union
 
 from pyspark.sql import DataFrame
 
+from getl_spark.common.path import StoragePath
 from getl_spark.plans.context import BlockConfig
 
 
@@ -65,15 +66,10 @@ def _input_dataframes(conf: BlockConfig) -> Dict[str, DataFrame]:
 
 
 def _load_resolve_from_path(code_path: str) -> Callable:
-    if code_path.startswith(("s3://", "s3a://")):
-        import boto3
-
-        bucket_key = code_path.split("://", 1)[1]
-        bucket, _, key = bucket_key.partition("/")
-        body = boto3.client("s3").get_object(Bucket=bucket, Key=key)["Body"].read()
-        tmp = tempfile.NamedTemporaryFile("wb", suffix=".py", delete=False)
-        tmp.write(body)
-        tmp.close()
+    source = StoragePath(code_path)
+    if source.is_s3:
+        with tempfile.NamedTemporaryFile("wb", suffix=".py", delete=False) as tmp:
+            tmp.write(source.read_bytes())
         code_path = tmp.name
     spec = importlib.util.spec_from_file_location("getl_custom_code", code_path)
     module = importlib.util.module_from_spec(spec)

@@ -803,10 +803,7 @@ def moments(
         F.avg("__mo_v").alias("__mo_mu"),
         F.count("*").cast("bigint").alias("n"),
     )
-    if keys:
-        joined = base.join(F.broadcast(means), keys)
-    else:
-        joined = base.crossJoin(F.broadcast(means))
+    joined = join_on_keys(base, F.broadcast(means), keys)
     d = F.col("__mo_v") - F.col("__mo_mu")
     cm = joined.groupBy(*keys).agg(
         F.first("n").alias("n"),
@@ -3504,10 +3501,7 @@ def bh_adjust(
         counts, keys, ["__p"], "__n", "__k", prepinned=True
     )
     m = counts.groupBy(*keys).agg(F.sum("__n").cast("bigint").alias("__m"))
-    if keys:
-        ranked = ranked.join(F.broadcast(m), keys)
-    else:
-        ranked = ranked.join(F.broadcast(m))
+    ranked = join_on_keys(ranked, F.broadcast(m), keys)
     ranked = ranked.withColumn(
         "__raw", F.col("__m").cast("double") * F.col("__p") / F.col("__k")
     ).withColumn("__negp", -F.col("__p"))

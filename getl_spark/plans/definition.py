@@ -18,11 +18,12 @@ Semantics match the reference (``getl/lift_definition.py:12-42``):
 
 from __future__ import annotations
 
-import os
 import re
 from typing import Any, Mapping
 
 import yaml
+
+from getl_spark.common.path import StoragePath
 
 _RAW_PARAM = re.compile(r"^\$\{(\w+)\}$")
 _EMBEDDED_PARAM = re.compile(r"\$\{(\w+)\}")
@@ -30,16 +31,9 @@ _EMBEDDED_PARAM = re.compile(r"\$\{(\w+)\}")
 
 def fetch_definition(lift_def: str) -> dict:
     """Load the YAML mapping from a string, local path, or s3:// URI."""
-    if lift_def.startswith(("s3://", "s3a://")):
-        import boto3
-
-        bucket_key = lift_def.split("://", 1)[1]
-        bucket, _, key = bucket_key.partition("/")
-        body = boto3.client("s3").get_object(Bucket=bucket, Key=key)["Body"].read()
-        lift_def = body.decode("utf-8")
-    elif os.path.exists(lift_def) and lift_def.endswith((".yml", ".yaml")):
-        with open(lift_def, "r", encoding="utf-8") as fh:
-            lift_def = fh.read()
+    path = StoragePath(lift_def)
+    if path.is_s3 or (lift_def.endswith((".yml", ".yaml")) and path.exists()):
+        lift_def = path.read_text()
     loaded = yaml.safe_load(lift_def)
     if not isinstance(loaded, Mapping):
         raise ValueError("A lift definition must be a YAML mapping of sections")

@@ -25,8 +25,8 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
 
+from getl_spark.common.path import StoragePath
 from getl_spark.common.scale import pin, local_df
-
 from getl_spark.common.tables import HAS_DELTA, ManagedTable
 from getl_spark.registry.base import FileRegistry, utcnow
 
@@ -108,13 +108,9 @@ class DeltaDiff(FileRegistry):
         return self.spark.read.parquet(f"{self.snapshot_dir}/v{version}")
 
     def _latest_snapshot_version(self) -> int:
-        import os
-
-        if not os.path.isdir(self.snapshot_dir):
-            return -1
         versions = [
             int(d[1:])
-            for d in os.listdir(self.snapshot_dir)
+            for d in StoragePath(self.snapshot_dir).listdir()
             if d.startswith("v") and d[1:].isdigit()
         ]
         return max(versions, default=-1)

@@ -151,8 +151,6 @@ def batch_scd2(conf: BlockConfig) -> DataFrame:
     columns), ``ValidFromColumn``/``ValidToColumn``/``CurrentColumn``
     (rename the metadata columns).
     """
-    from getl_spark.common.tables import ManagedTable
-
     df = conf.input_df()
     ManagedTable(conf.spark, conf.get("Path")).scd2_merge(
         df,
@@ -252,6 +250,37 @@ def stream_delta(conf: BlockConfig) -> DataFrame:
     return df
 
 
+def _drain(
+    conf: BlockConfig,
+    default_base: str,
+    each_batch: Callable[[DataFrame, int], None],
+    output_mode: str = "append",
+) -> DataFrame:
+    """Run ``each_batch(batch_df, batch_id)`` on every non-empty
+    micro-batch of the input stream until everything new is drained
+    (``trigger(availableNow=True)``), then return the input. The
+    checkpoint is ``Checkpoint``, default ``<default_base>__checkpoint``
+    — a SIBLING of the output, never inside it: a sink that rewrites
+    its output directory would otherwise wipe the checkpoint
+    mid-stream."""
+    df = conf.input_df()
+    checkpoint = conf.get("Checkpoint", f"{default_base.rstrip('/')}__checkpoint")
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            each_batch(batch_df, batch_id)
+
+    (
+        df.writeStream.trigger(availableNow=True)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint)
+        .foreachBatch(run)
+        .start()
+        .awaitTermination()
+    )
+    return df
+
+
 def stream_upsert(conf: BlockConfig) -> DataFrame:
     """Streamed MERGE sink: each micro-batch is upserted into the
     managed table via ``foreachBatch`` — the standard pattern for
@@ -279,18 +308,12 @@ def stream_upsert(conf: BlockConfig) -> DataFrame:
     ``trigger(availableNow=True)`` drains everything new then stops —
     incremental-batch, exactly like ``stream_delta``.
     """
-    from getl_spark.common.tables import ManagedTable
-
-    df = conf.input_df()
     path = conf.get("Path")
     merge_statement = conf.get("MergeStatement")
     keys = conf.get("Keys", None)
     order_by = conf.get("OrderBy", None)
-    checkpoint = conf.get("Checkpoint", f"{path.rstrip('/')}__checkpoint")
 
     def upsert_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         if keys and order_by:
             # Deterministic latest-wins: a batch holding several
             # versions of a key merges the newest — the shared
@@ -304,15 +327,7 @@ def stream_upsert(conf: BlockConfig) -> DataFrame:
             batch_df, merge_statement
         )
 
-    (
-        df.writeStream.trigger(availableNow=True)
-        .outputMode(conf.get("OutputMode", "append"))
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(upsert_batch)
-        .start()
-        .awaitTermination()
-    )
-    return df
+    return _drain(conf, path, upsert_batch, conf.get("OutputMode", "append"))
 
 
 def stream_dedup_ingest(conf: BlockConfig) -> DataFrame:
@@ -350,17 +365,13 @@ def stream_dedup_ingest(conf: BlockConfig) -> DataFrame:
     from getl_spark.functions.graph import dedup_by_component
     from getl_spark.functions.text import fingerprint as fp
 
-    df = conf.input_df()
     out = conf.get("Path")
     index_path = conf.get("IndexPath")
     id_col = conf.get("IdColumn", "doc_id")
     text_col = conf.get("TextColumn", "text")
     near = conf.get("NearThreshold", None)
-    checkpoint = conf.get("Checkpoint", f"{out.rstrip('/')}__checkpoint")
 
     def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         batch = dedup.exact(
             fp(batch_df, text_col, "__fp"), ["__fp"], order_by=id_col
         ).drop("__fp")
@@ -386,15 +397,7 @@ def stream_dedup_ingest(conf: BlockConfig) -> DataFrame:
             fingerprint_col="fingerprint", sig_col=sig_col,
         )
 
-    (
-        df.writeStream.trigger(availableNow=True)
-        .outputMode(conf.get("OutputMode", "append"))
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(ingest_batch)
-        .start()
-        .awaitTermination()
-    )
-    return df
+    return _drain(conf, out, ingest_batch, conf.get("OutputMode", "append"))
 
 
 def stream_vector_ingest(conf: BlockConfig) -> DataFrame:
@@ -429,7 +432,6 @@ def stream_vector_ingest(conf: BlockConfig) -> DataFrame:
     """
     from getl_spark.functions import dedup, similarity
 
-    df = conf.input_df()
     out = conf.get("Path")
     index_path = conf.get("IndexPath")
     id_col = conf.get("IdColumn", "vec_id")
@@ -437,11 +439,8 @@ def stream_vector_ingest(conf: BlockConfig) -> DataFrame:
     threshold = float(conf.get("Threshold", 0.9))
     nprobe = int(conf.get("NProbe", 4))
     nlist_batch = int(conf.get("WithinBatchNlist", 16))
-    checkpoint = conf.get("Checkpoint", f"{out.rstrip('/')}__checkpoint")
 
     def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         batch = batch_df.dropDuplicates([id_col])
         # co-arriving near-dups never meet the index — collapse them
         # with the in-memory SemDeDup composition (min-id winner)
@@ -462,15 +461,7 @@ def stream_vector_ingest(conf: BlockConfig) -> DataFrame:
             survivors, index_path, id_col=id_col, vec_col=vec_col
         )
 
-    (
-        df.writeStream.trigger(availableNow=True)
-        .outputMode(conf.get("OutputMode", "append"))
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(ingest_batch)
-        .start()
-        .awaitTermination()
-    )
-    return df
+    return _drain(conf, out, ingest_batch, conf.get("OutputMode", "append"))
 
 
 def stream_drift_monitor(conf: BlockConfig) -> DataFrame:
@@ -521,14 +512,12 @@ def stream_drift_monitor(conf: BlockConfig) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    df = conf.input_df()
     out = conf.get("Path")
     ref_path = conf.get("Reference")
     cols = conf.get("Columns", []) or []
     cat_cols = conf.get("ColumnsCategorical", []) or []
     top_k = int(conf.get("TopK", 10))
     bins = int(conf.get("Bins", 10))
-    checkpoint = conf.get("Checkpoint", f"{out.rstrip('/')}__checkpoint")
     if not cols and not cat_cols:
         raise ValueError(
             "stream_drift_monitor: need Columns or ColumnsCategorical"
@@ -641,8 +630,6 @@ def stream_drift_monitor(conf: BlockConfig) -> DataFrame:
     report_table = ManagedTable(spark, out)
 
     def monitor_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         # ONE aggregate pays for both the bin cells and the row count
         # (no separate count() scan of the batch)
         row = counts(batch_df, with_total=True)
@@ -676,15 +663,7 @@ def stream_drift_monitor(conf: BlockConfig) -> DataFrame:
         )
         report_table.write(report, "append")
 
-    (
-        df.writeStream.trigger(availableNow=True)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(monitor_batch)
-        .start()
-        .awaitTermination()
-    )
-    return df
+    return _drain(conf, out, monitor_batch)
 
 
 def stream_route(conf: BlockConfig) -> DataFrame:
@@ -729,7 +708,6 @@ def stream_route(conf: BlockConfig) -> DataFrame:
     N source reads. ``trigger(availableNow=True)`` drains then stops
     (incremental-batch, like every stream sink here).
     """
-    df = conf.input_df()
     routes = conf.get("Routes")
     if not routes:
         raise ValueError("stream_route: Routes must be a non-empty list")
@@ -743,17 +721,12 @@ def stream_route(conf: BlockConfig) -> DataFrame:
     else_path = conf.get("ElsePath", None)
     fmt = conf.get("Format", "parquet")
     with_batch_id = bool(conf.get("WithBatchId", False))
-    checkpoint = conf.get(
-        "Checkpoint", f"{routes[0]['Path'].rstrip('/')}__checkpoint"
-    )
 
     def route_batch(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import functions as F
 
         from getl_spark.common.scale import run_concurrent
 
-        if batch_df.isEmpty():
-            return
         if with_batch_id:
             batch_df = batch_df.withColumn(
                 "_batch_id", F.lit(int(batch_id)).cast("bigint")
@@ -801,12 +774,4 @@ def stream_route(conf: BlockConfig) -> DataFrame:
         finally:
             batch_df.unpersist()
 
-    (
-        df.writeStream.trigger(availableNow=True)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(route_batch)
-        .start()
-        .awaitTermination()
-    )
-    return df
+    return _drain(conf, routes[0]["Path"], route_batch)

@@ -22,12 +22,12 @@ from __future__ import annotations
 
 import functools
 import json
-import os
 from typing import Callable, List, Optional, Union
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from getl_spark.common.errors import NoDataToProcess
+from getl_spark.common.path import StoragePath
 from getl_spark.common.utils import json_to_spark_schema
 from getl_spark.plans.context import BlockConfig
 
@@ -341,21 +341,7 @@ def _resolve_schema(conf: BlockConfig, path_key: str = "JsonSchemaPath"):
     if conf.exists("PySparkSchema"):
         return conf.get("PySparkSchema")
     if conf.exists(path_key):
-        schema_path = conf.get(path_key)
-        if schema_path.startswith(("s3://", "s3a://")):
-            import boto3
-
-            bucket_key = schema_path.split("://", 1)[1]
-            bucket, _, key = bucket_key.partition("/")
-            text = (
-                boto3.client("s3")
-                .get_object(Bucket=bucket, Key=key)["Body"]
-                .read()
-                .decode("utf-8")
-            )
-        else:
-            with open(schema_path, "r", encoding="utf-8") as fh:
-                text = fh.read()
+        text = StoragePath(conf.get(path_key)).read_text()
         return json_to_spark_schema(json.loads(text))
     if conf.exists("JsonSchema"):
         return json_to_spark_schema(conf.get("JsonSchema"))

@@ -608,3 +608,22 @@ LiftJob:
     assert all(r.date_lifted is not None for r in rows)
     late = [r for r in rows if r.prefix_date == dt.datetime(2022, 6, 15)]
     assert len(late) == 2
+
+
+@pytest.mark.skipif(HAS_DELTA, reason="part files of the parquet-fallback control table")
+def test_full_scan_control_table_stays_one_file(spark, tmp_path):
+    """Each increment appends its new files to the control table and
+    the stamp rewrite compacts the table again, so three increments of
+    a small registry leave one part file, not one per lift."""
+    import os
+
+    src, reg, out = str(tmp_path / "src"), str(tmp_path / "reg"), str(tmp_path / "out")
+    for i in range(3):
+        spark.createDataFrame([(i, "v")], "id BIGINT, v STRING").coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+        lift(spark, _definition(src, reg, out))
+    assert spark.read.parquet(out).count() == 3
+    assert len([f for f in os.listdir(reg) if f.endswith(".parquet")]) == 1
+    rows = spark.read.parquet(reg).collect()
+    assert len(rows) == 3 and all(r.date_lifted is not None for r in rows)

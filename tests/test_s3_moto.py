@@ -121,3 +121,82 @@ def test_delete_files_s3(s3_bucket):
         StoragePath(k).write_text("x")
     delete_files(keys)
     assert all(not StoragePath(k).exists() for k in keys)
+
+
+def _put(*keys):
+    for key in keys:
+        StoragePath(f"s3://{BUCKET}/{key}").write_text("{}")
+
+
+def _keys():
+    import boto3
+
+    pages = boto3.client("s3").get_paginator("list_objects_v2").paginate(Bucket=BUCKET)
+    return sorted(o["Key"] for page in pages for o in page.get("Contents", []))
+
+
+def test_listing_is_the_directory_not_the_key_prefix(s3_bucket):
+    """``in`` is a directory: ``in_old/`` and ``index.json`` share its
+    key prefix but are neither listed nor deleted with it."""
+    _put("in/a.json", "in/sub/b.json", "in_old/z.json", "index.json")
+    expected = [f"s3://{BUCKET}/in/a.json", f"s3://{BUCKET}/in/sub/b.json"]
+    assert list_files(f"s3://{BUCKET}/in", ".json") == expected
+    assert [str(p) for p in StoragePath(f"s3://{BUCKET}/in/").glob(".json")] == expected
+    StoragePath(f"s3://{BUCKET}/in").delete_recursive()
+    assert _keys() == ["in_old/z.json", "index.json"]
+
+
+def test_listing_skips_hidden_names_like_local(s3_bucket, tmp_path):
+    names = ["a.json", "_SUCCESS", ".x.json", "sub/_tmp.json", "sub/b.json"]
+    _put(*[f"in/{n}" for n in names])
+    for n in names:
+        StoragePath(str(tmp_path / n)).write_text("{}")
+    s3_found = [p[len(f"s3://{BUCKET}/in/"):] for p in list_files(f"s3://{BUCKET}/in")]
+    local_found = [p[len(str(tmp_path)) + 1:] for p in list_files(str(tmp_path))]
+    glob_found = [
+        str(p)[len(f"s3://{BUCKET}/in/"):] for p in StoragePath(f"s3://{BUCKET}/in").glob()
+    ]
+    assert s3_found == local_found == glob_found == ["a.json", "sub/b.json"]
+
+
+def test_delete_recursive_removes_hidden_objects(s3_bucket):
+    _put("t/part-0.parquet", "t/_SUCCESS", "t/.part-0.parquet.crc", "t/_delta_log/0.json")
+    _put("t_old/_SUCCESS")
+    StoragePath(f"s3://{BUCKET}/t").delete_recursive()
+    assert _keys() == ["t_old/_SUCCESS"]
+
+
+def test_s3a_input_lists_s3a_paths(s3_bucket):
+    _put("in/a.json", "in/sub/b.json")
+    assert list_files(f"s3a://{BUCKET}/in", ".json") == [
+        f"s3a://{BUCKET}/in/a.json",
+        f"s3a://{BUCKET}/in/sub/b.json",
+    ]
+
+
+def test_parquet_table_exists_on_s3(s3_bucket):
+    """The parquet fallback sees an S3 table by a ``*.parquet`` or
+    ``_SUCCESS`` entry directly in its directory; a sibling prefix's
+    files do not make it exist."""
+    from getl_spark.common.tables import ManagedTable
+
+    table = ManagedTable(None, f"s3://{BUCKET}/t", fmt="parquet")
+    _put("t_old/part-0.parquet", "t_old/_SUCCESS", "t.parquet")
+    assert not table.exists()
+    _put("t/part-0.parquet")
+    assert table.exists()
+    assert ManagedTable(None, f"s3://{BUCKET}/t/", fmt="parquet").exists()
+
+
+def test_delta_diff_finds_snapshots_on_s3(s3_bucket):
+    """Without delta-spark the row registry keeps key snapshots in
+    ``snapshot/v<N>``; they are found on S3 as locally, and a sibling
+    ``snapshot_old/`` holds none of them."""
+    from getl_spark.registry.delta_diff import DeltaDiff
+
+    registry = DeltaDiff.__new__(DeltaDiff)
+    registry.snapshot_dir = f"s3://{BUCKET}/reg/snapshot"
+    assert registry._latest_snapshot_version() == -1
+    _put("reg/snapshot/v0/part-0.parquet", "reg/snapshot/v1/_SUCCESS")
+    _put("reg/snapshot_old/v9/part-0.parquet")
+    assert registry._latest_snapshot_version() == 1

@@ -2123,6 +2123,27 @@ def test_moments_matches_reference_and_known_shapes(spark):
     assert "g" not in out or out.get("g") is None or out["g"].n == 0
 
 
+def test_moments_and_bh_adjust_keep_null_group(spark):
+    """A NULL group key is a group of its own: ``moments`` reports it
+    and ``bh_adjust`` adjusts its rows exactly as the ungrouped call on
+    those rows alone."""
+    from getl_spark.functions import stats
+
+    rows = [("a", 1.0, 0.01), ("a", 2.0, 0.04), ("a", 4.0, 0.5),
+            (None, 3.0, 0.02), (None, 5.0, 0.03), (None, 10.0, 0.6)]
+    df = spark.createDataFrame(rows, "g STRING, x DOUBLE, p DOUBLE")
+    mo = {r.g: r for r in stats.moments(df, "x", "g").collect()}
+    assert set(mo) == {"a", None}
+    assert mo[None].n == 3 and mo[None].mean == 6.0
+    assert mo["a"].n == 3 and mo["a"].mean == pytest.approx(7 / 3, abs=1e-6)
+
+    grouped = {r.p: r.p_adj for r in stats.bh_adjust(df, "p", group_by="g").collect()
+               if r.g is None}
+    alone = {r.p: r.p_adj for r in stats.bh_adjust(df.where("g IS NULL"), "p").collect()}
+    assert None not in grouped.values()
+    assert grouped == alone == {0.02: 0.045, 0.03: 0.045, 0.6: 0.6}
+
+
 def test_round8_ops_partition_invariance(spark):
     """wilcoxon, moments, and balanced_downsample return identical
     results at 1, 7, and 32 input partitions — the property that makes
